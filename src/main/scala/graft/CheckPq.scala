@@ -98,7 +98,8 @@ object CheckPq {
       Codebooks.centroidsArr, Codebooks.centroidNorms,
       Codebooks.centroidsArr.zip(Codebooks.centroidNorms).map { case (c, nn) => c.map(_ / nn) },
       Codebooks.pqCents, cosExact)
-    val gotCos = graft.operators.Similarity.ivfPqTopKSized(emb, col("vec_id") < 8, k)
+    val gotCos = graft.operators.Similarity.ivfTopK(emb, col("vec_id") < 8,
+      graft.operators.IvfSpec(codes = graft.operators.IvfSpec.PqFormula), k)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getInt(3))).toMap
     if (gotCos != cosReplay) {
       bad += (gotCos.keySet ++ cosReplay.keySet)
@@ -125,7 +126,8 @@ object CheckPq {
       augQ, augC,
       Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms,
       Codebooks.mipsCentroidsHat, Codebooks.mipsPqCents, ipExact)
-    val gotMips = graft.operators.Similarity.mipsIvfPqTopKSized(emb, col("vec_id") < 8, k)
+    val gotMips = graft.operators.Similarity.ivfTopK(emb, col("vec_id") < 8,
+      graft.operators.IvfSpec.MipsPq, k)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getInt(3))).toMap
     if (gotMips != mipsReplay) {
       val mb = (gotMips.keySet ++ mipsReplay.keySet)

@@ -209,61 +209,30 @@ object Cli {
     * (codes bucketed by the probe key + the full-vector rerank table
     * bucketed by corpus_id) and answer the query vectors' top-k from
     * it — probe, code-only approximate scoring, k·refine shortlist,
-    * exact rerank. Everything rides the laddered pqServingExprs
-    * kernels, so the answers equal Similarity.ivfPqTopKSized
-    * bit-for-bit (the single-window shortlist is the stream twin's
+    * exact rerank. This is the stream's bounded index-serve step
+    * (SimilarityStream.serveBounded) over the spec of the matching
+    * registered row, so the answers equal Similarity.ivfTopK over that
+    * spec bit-for-bit (the single-window shortlist is the
     * equality-preserving form of the two-phase rerank — same total
     * order).
     */
   private def queryCommand(spark: SparkSession, o: Opts, emb: DataFrame,
                            table: String, print: String => Unit): Int = {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.expressions.Window
-    val n = emb.count()
-    // -f swaps in the FITTED serving quartet (laddered coarse k-means +
-    // residual book fitted against it — the r16/r17 recall answer); -r
-    // dials the probed fraction (probesForRecall). Both builders are the
-    // ones the registered rows ride, so command answers stay bit-equal
-    // to the library operators (CliSpec).
-    val baseProbes = Similarity.probesForRecall(o.recall)
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      if (o.quality) Similarity.pqFittedServingExprs(
-        emb, Similarity.sizedProbes(baseProbes, n), Similarity.sizedNlist(n),
-        pqK = 64, pqSeedRowBase = 41000, pqM = 16, pqFitSample = 8192)
-      else if (o.fitted) Similarity.pqFittedServingExprs(
-        emb, Similarity.sizedProbes(baseProbes, n), Similarity.sizedNlist(n))
-      else Similarity.pqServingExprs(
-        emb, Similarity.sizedProbes(baseProbes, n), Similarity.sizedNlist(n))
-    val refine = Similarity.sizedRefine(n) * (if (o.quality) 4 else 1)
+    import graft.operators.{IvfSpec, Similarity}
+    import graft.streaming.SimilarityStream
+    // -f swaps in the FITTED books (laddered coarse k-means + residual
+    // book fitted against it — the r16/r17 recall answer), -q the m16
+    // serving point; -r dials the probed fraction (probesForRecall).
+    val spec = (if (o.quality) IvfSpec.M16
+      else if (o.fitted) IvfSpec.FittedPq
+      else IvfSpec(codes = IvfSpec.PqFormula))
+      .copy(probes = Similarity.probesForRecall(o.recall))
     val isQuery = col("vec_id") < 8
-    val v = Similarity.vectors(emb)
-    graft.sources.Bucketing.writeBucketed(
-      v.filter(!isQuery).select(col("vec_id").as("corpus_id"),
-        bucketCol.as("bucket"), codeCol.as("codes")),
-      table, 8, "bucket")
-    graft.sources.Bucketing.writeBucketed(
-      v.filter(!isQuery).select(col("vec_id").as("corpus_id"),
-        col("e").as("ec"), col("nrm").as("nc")),
-      s"${table}_vecs", 8, "corpus_id")
-    val probed = v.filter(isQuery)
-      .withColumn("bucket", explode(probesCol))
-      .select(col("vec_id").as("query_id"), col("e").as("eq"),
-        col("nrm").as("nq"), col("bucket"))
-    val approx = probed.join(spark.table(table), "bucket")
-      .select(col("query_id"), col("eq"), col("nq"), col("corpus_id"),
-        scoreCol.as("acos"))
-    val wa = Window.partitionBy(col("query_id"))
-      .orderBy(col("acos").desc, col("corpus_id"))
-    val short = approx.withColumn("srnk", row_number().over(wa))
-      .filter(col("srnk") <= o.topk * refine)
-      .drop("srnk", "acos")
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("corpus_id"))
-    val topk = short.join(spark.table(s"${table}_vecs"), "corpus_id")
-      .withColumn("cos", expr("graft_dot(eq, ec)") / (col("nq") * col("nc")))
-      .withColumn("rnk", row_number().over(wr))
-      .filter(col("rnk") <= o.topk)
-      .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk"))
+    val s = Similarity.servingKernels(emb, isQuery, spec, emb.count())
+    SimilarityStream.writeIndex(emb.filter(!isQuery), s, table, s"${table}_vecs")
+    val cand = SimilarityStream.probeIndex(
+      Similarity.vectors(emb.filter(isQuery)), s, spark.table(table))
+    val topk = SimilarityStream.serveBounded(cand, s, o.topk, spark.table(s"${table}_vecs"))
     writeOut(topk, o.out, "topk")
     val back = spark.read.parquet(s"${o.out}/topk")
     val nq = back.select("query_id").distinct().count()
@@ -398,8 +367,8 @@ object Cli {
           // the ANN lookup itself (r16, r15 VERDICT #7): serve top-k
           // cosine neighbors for the query vectors FROM a compact
           // (bucket, codes) index table built here — the gated
-          // sim_topk_ivf_pq serving row's plan, kernels from the shared
-          // pqServingExprs quartet, so command output == the library
+          // sim_topk_ivf_pq serving row's spec, kernels from the shared
+          // servingKernels builder, so command output == the library
           // operator bit-for-bit (CliSpec)
           case "query" =>
             val Seq(srcName, table) = o.positional.toSeq

@@ -37,12 +37,12 @@ object ProfFit {
       val n = t("emb.count")(emb.count())
       val nlist = Similarity.sizedNlist(n)
       val cents = t("fitCentroids(3 rounds)")(
-        Similarity.fitCentroids(emb, nlist, 3))
+        Similarity.fitCentroids(emb, nlist, 3, Similarity.sizedKmFitModulus(n)))
       val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
       t("fitPqCodebooks(sample+loop)")(
-        Similarity.fitPqCodebooks(emb, cents, cnorms))
+        Similarity.fitPqCodebooks(emb, cents, cnorms, graft.operators.IvfSpec.PqFitted()))
       t("fitted_sized serve (full row)") {
-        Similarity.ivfPqTopKFittedSized(emb, isQuery, k = 10)
+        Similarity.ivfTopK(emb, isQuery, graft.operators.IvfSpec.FittedPq, k = 10)
           .write.mode("overwrite").format("noop").save()
       }
       t("mips_fitted (full row)") {

@@ -3,15 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev tool (r14): recall-vs-refine evidence for the PQ shortlist knob.
-  * The PQ rows rerank a k·refine shortlist exactly; refine=4 is the
-  * serving default, and the open question (SURVEY §7 round-15 (b)) is
-  * whether refine needs an N-adaptive ladder like nlist. This sweeps
-  * refine ∈ {1,2,4,8,16} for both PQ serving rows (cosine IVF-PQ and
-  * augmented-space MIPS-PQ) against their EXACT baselines and prints
-  * recall@10 — the probed-bucket candidate set is the recall CEILING
-  * (refine→∞ cannot beat the full-vector IVF row), so the sweep shows
-  * where the shortlist knob saturates at each corpus size.
+/** Dev tool (r14): recall@10 of IVF serving specs against their EXACT
+  * baselines (brute-force cosine, exact MIPS). The PQ rows rerank a
+  * k·refine shortlist exactly; the probed-bucket candidate set is the
+  * recall CEILING (refine→∞ cannot beat the full-vector IVF row), so
+  * the refine sweep shows where the shortlist knob saturates at each
+  * corpus size, and the named arms price each recall lever.
   *
   * Usage: runMain graft.RecallSweep <sfDir>
   */
@@ -32,98 +29,64 @@ object RecallSweep {
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val isQuery = col("vec_id") < 8
     val S = graft.operators.Similarity
+    import graft.operators.IvfSpec
+    import IvfSpec.{Fixed, PqFitted, PqFormula, Sized}
     val exactCos = S.bruteForceTopK(emb, isQuery, k = 10)
       .select("query_id", "corpus_id").cache()
     val exactMips = S.mipsTopK(emb, isQuery, k = 10)
       .select("query_id", "corpus_id").cache()
     val nCos = exactCos.count().toDouble
     val nMips = exactMips.count().toDouble
-    // the ceilings: the full-vector IVF rows (every probed candidate
-    // reranked exactly — what refine->inf converges to)
-    val ceilCos = S.ivfTopK(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id")
-      .intersect(exactCos).count() / nCos
-    // the registered serving path since late r15 — rides the
-    // nlist+probes ladder, so its ceiling is the one that must hold
-    // (not sag) across decades; the fixed-64 arm stays printed as the
-    // documented opposite trade (flat recall at linear candidate cost)
-    val ceilCosSized = S.ivfTopKSized(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id")
-      .intersect(exactCos).count() / nCos
-    val ceilMips = S.mipsIvfTopK(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id")
-      .intersect(exactMips).count() / nMips
-    // the LADDERED MIPS fit (r16): fitted books at sizedNlist — the
-    // registered sim_topk_mips_ivf_fitted path
-    val mipsFit = S.mipsIvfTopKFittedSized(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id")
-      .intersect(exactMips).count() / nMips
-    println(f"[recall-sweep] $sfDir ceilings: cosine-IVF(fixed64)=$ceilCos%.3f " +
-      f"cosine-IVF(sized)=$ceilCosSized%.3f mips-IVF(sized)=$ceilMips%.3f " +
-      f"mips-IVF(sized FITTED)=$mipsFit%.3f")
-    for (refine <- Seq(1, 2, 4, 8, 16)) {
-      val rc = S.ivfPqTopK(emb, isQuery, k = 10, refine = refine)
-        .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-      val rm = S.mipsIvfPqTopK(emb, isQuery, k = 10, refine = refine)
-        .select("query_id", "corpus_id").intersect(exactMips).count() / nMips
-      println(f"[recall-sweep] refine=$refine%-2d cosine-IVF-PQ=$rc%.3f mips-IVF-PQ=$rm%.3f")
-    }
-    // the registered serving row (late r15): coarse books + probes +
-    // refine all on the corpus ladders — finer buckets shrink the PQ
-    // approximation's per-probe candidate pool, so this line is the
-    // honest serving recall the fixed-64 sweep above understates
-    val rServing = S.ivfPqTopKSized(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] cosine-IVF-PQ(sized, registered) recall=$rServing%.3f")
-    // the FITTED residual book on the same ladder (r16, r15 VERDICT #1):
-    // same coarse books / probes / shortlist — the delta vs the line
-    // above is pure residual-book quality
-    val rResFit = S.ivfPqTopKResFitted(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] cosine-IVF-PQ(sized, FITTED residual book) recall=$rResFit%.3f")
-    // the FULLY-fitted ladder (r16): laddered coarse k-means + residual
-    // fit against those fitted centroids — the arm the r16 measurement
-    // says actually lifts serving recall (a fitted residual book against
-    // the RANDOM ladder shrinks tail scores and ranks worse)
-    val rFitSized = S.ivfPqTopKFittedSized(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] cosine-IVF-PQ(sized, FITTED coarse+residual) recall=$rFitSized%.3f")
-    // the recall-target frontier (r16, r15 VERDICT #2): base probes 16
-    // pins fraction 1/8 on the same ladder — recall vs DOUBLE the
-    // candidates, the one-parameter cost/recall dial
+    def recall(spec: IvfSpec): Double =
+      S.ivfTopK(emb, isQuery, spec, k = 10).select("query_id", "corpus_id")
+        .intersect(if (spec.mips) exactMips else exactCos).count() /
+        (if (spec.mips) nMips else nCos)
     val hi = S.probesForRecall("high")
-    val ceilCosHr = S.ivfTopKSized(emb, isQuery, k = 10, probes = hi)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    val rServingHr = S.ivfPqTopKSized(emb, isQuery, k = 10, probes = hi)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] recall-target=high (base 16, fraction 1/8): " +
-      f"cosine-IVF ceiling=$ceilCosHr%.3f cosine-IVF-PQ=$rServingHr%.3f " +
-      f"(vs standard $ceilCosSized%.3f / $rServing%.3f at half the candidates)")
-    // r17 frontier arms (r16 VERDICT #1/#7): the two recall levers
-    // COMPOSED (fitted books x high probes — the registered fitted_hr
-    // row), the refine-boost dial on the fitted book, and the
-    // wide-residual-book (K=64) pricing arm at both probe targets
-    val rFitHr = S.ivfPqTopKFittedSized(emb, isQuery, k = 10, probes = hi)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] cosine-IVF-PQ(sized, FITTED x HIGH probes — fitted_hr) recall=$rFitHr%.3f")
-    val rFitR2 = S.ivfPqTopKFittedSizedRefine(emb, isQuery, k = 10, refineMul = 2)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    val rFitR4 = S.ivfPqTopKFittedSizedRefine(emb, isQuery, k = 10, refineMul = 4)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] fitted refine-boost: x2=$rFitR2%.3f x4=$rFitR4%.3f (vs x1 $rFitSized%.3f)")
-    val rFitW = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    val rFitWHr = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10, probes = hi)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] fitted WIDE book (K=64): standard=$rFitW%.3f high=$rFitWHr%.3f")
-    // the two WINNING levers composed (sf1 showed probes non-binding on
-    // the PQ rows but refine and code width both binding)
-    val rFitWR4 = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10, refineMul = 4)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    val rFitWR4Hr = S.ivfPqTopKFittedSizedWide(emb, isQuery, k = 10, probes = hi,
-      refineMul = 4)
-      .select("query_id", "corpus_id").intersect(exactCos).count() / nCos
-    println(f"[recall-sweep] fitted WIDE x refine4: standard=$rFitWR4%.3f high=$rFitWR4Hr%.3f")
+    val fitted = IvfSpec.FittedPq
+    // (label, spec) arms. The ceilings are the full-vector rows (every
+    // probed candidate reranked exactly — what refine->inf converges
+    // to); the fixed-64 arm is the documented opposite trade (flat
+    // recall at linear candidate cost). The fixed-book refine sweep
+    // shows where the shortlist knob saturates; the laddered PQ rows
+    // are the honest serving recall, with the residual-book (formula,
+    // FITTED residual, fully-fitted), recall-target (base 16 = fraction
+    // 1/8 at double the candidates), refine-boost and wide-book (K=64)
+    // levers of the r16/r17 frontier.
+    val arms: Seq[(String, IvfSpec)] = Seq(
+      "cosine-IVF(fixed64) ceiling" -> IvfSpec(laddered = false),
+      "cosine-IVF(sized) ceiling" -> IvfSpec(),
+      "mips-IVF(sized) ceiling" -> IvfSpec(mips = true),
+      "mips-IVF(sized FITTED)" -> IvfSpec(mips = true, fitted = true)) ++
+      Seq(1, 2, 4, 8, 16).flatMap(r => Seq(
+        s"refine=$r cosine-IVF-PQ" -> IvfSpec(laddered = false, codes = PqFormula, refine = Fixed(r)),
+        s"refine=$r mips-IVF-PQ" ->
+          IvfSpec.MipsPq.copy(refine = Fixed(r)))) ++ Seq(
+      "cosine-IVF-PQ(sized, registered)" -> IvfSpec(codes = PqFormula),
+      "cosine-IVF-PQ(sized, FITTED residual book)" -> IvfSpec(codes = PqFitted()),
+      "cosine-IVF-PQ(sized, FITTED coarse+residual)" -> fitted,
+      "high: cosine-IVF ceiling" -> IvfSpec(probes = hi),
+      "high: cosine-IVF-PQ" -> IvfSpec(codes = PqFormula, probes = hi),
+      "high: FITTED (fitted_hr)" -> fitted.copy(probes = hi),
+      "fitted refine-boost x2" -> fitted.copy(refine = Sized(2)),
+      "fitted refine-boost x4" -> fitted.copy(refine = Sized(4)),
+      "fitted WIDE book (K=64)" -> fitted.copy(codes = PqFitted(k = 64)),
+      "fitted WIDE book (K=64) high" -> fitted.copy(codes = PqFitted(k = 64), probes = hi),
+      "fitted WIDE x refine4" -> fitted.copy(codes = PqFitted(k = 64), refine = Sized(4)),
+      "fitted WIDE x refine4 high" ->
+        fitted.copy(codes = PqFitted(k = 64), refine = Sized(4), probes = hi),
+      // the r17b residual-book SHAPE dials: subspace count (M=8 → 16)
+      // and fit sample size (a K=64 book overfits 2048 rows: 32
+      // rows/cell vs the narrow book's 128)
+      "wideS8 (8x64 s8192 r4)" -> fitted.copy(codes = PqFitted(8, 64, 8192), refine = Sized(4)),
+      "m16 (16x16 s2048 r4)" -> fitted.copy(codes = PqFitted(16, 16), refine = Sized(4)),
+      "m16s8 (16x16 s8192 r4)" -> fitted.copy(codes = PqFitted(16, 16, 8192), refine = Sized(4)),
+      "m16w (16x64 s8192 r4, registered m16)" -> IvfSpec.M16)
+    for ((label, spec) <- arms) {
+      val t0 = System.nanoTime()
+      val r = recall(spec)
+      println(f"[recall-sweep] $sfDir $label%-44s recall@10=$r%.3f " +
+        f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs")
+    }
     exactCos.unpersist(); exactMips.unpersist()
     spark.stop()
   }

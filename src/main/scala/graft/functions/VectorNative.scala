@@ -48,7 +48,7 @@ object Codebooks {
     * planes with an offset so the two codebooks never overlap (planes
     * consume generator rows 0..NPlanes-1 = 0..127; centroids start at
     * row 200). `centroidsFor` generates a codebook of any nlist — the
-    * Similarity.ivfTopK nlist parameter.
+    * rungs of Similarity.sizedNlist.
     */
   def centroidsFor(n: Int): IndexedSeq[IndexedSeq[Double]] = {
     // generator-row budget: planes end at row 127, small codebooks own
@@ -361,9 +361,14 @@ case class IvfBucket(child: Expression,
 /** e → array<int> of the query's `probes` probe buckets: position of the
   * p-th largest centroid cosine, first-position-of-value semantics —
   * mirrors `array_position(cc, element_at(sort_array(cc, desc), p))`
-  * (and the oracle's list_position/list_sort) including its duplicate-
-  * value behavior; downstream `distinct()` collapses repeats identically.
-  * Codebook pluggable exactly as in [[IvfBucket]].
+  * (and the oracle's list_position/list_sort). Tied cosines map to the
+  * same first position — a zero-norm vector's all-NaN cosines map every
+  * p to 1 — and each position is emitted ONCE, so the array can be
+  * shorter than `probes`: the probe set equals the oracle's
+  * `SELECT DISTINCT` over its unnested probes, and an IVF probe join
+  * (one bucket per corpus vector) yields each candidate exactly once
+  * with no downstream dedup. Codebook pluggable exactly as in
+  * [[IvfBucket]].
   */
 case class IvfProbes(child: Expression, probes: Int,
                      cents: Array[Array[Double]] = Codebooks.centroidsArr,
@@ -400,7 +405,7 @@ case class IvfProbes(child: Expression, probes: Int,
   * are argmin-of-squared-L2 per subspace, first-min tie-break (the
   * oracle's list_position(d, list_min(d)) semantics). Codebooks default
   * to the oracle-replayable LCG constants; data-fitted coarse + PQ
-  * codebooks (Similarity.ivfPqTopKFitted) plug in through the same
+  * codebooks (IvfSpec fitted coarse + PqFitted codes) plug in through the same
   * kernel — codegen carries them as reference objects.
   */
 case class PqCode(child: Expression,
@@ -789,16 +794,18 @@ object VectorNativeImpl {
     val cc = centroidCos(e, cents, cnorms)
     val sorted = cc.clone()
     java.util.Arrays.sort(sorted) // ascending, NaN last — same total order
+    val seen = new Array[Boolean](cc.length)
     val out = new Array[Int](probes)
+    var n = 0
     var p = 0
     while (p < probes) {
       val v = sorted(sorted.length - 1 - p) // p-th largest
       var i = 0
       while (i < cc.length && sqlCompare(cc(i), v) != 0) i += 1
-      out(p) = i + 1
+      if (!seen(i)) { seen(i) = true; out(n) = i + 1; n += 1 }
       p += 1
     }
-    new GenericArrayData(out)
+    new GenericArrayData(if (n == probes) out else java.util.Arrays.copyOf(out, n))
   }
 
   /** See [[PcaWhiten]]. Projections fold min-length in index order

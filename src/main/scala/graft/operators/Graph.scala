@@ -279,8 +279,7 @@ object Graph {
     // random book, so graph recall on clustered corpora runs below the
     // isotropic measurement. OPT-IN: the registered rows keep the
     // formula book their oracles replay.
-    val knn = if (fittedBook) Similarity.knnJoinIvfFittedSized(emb, k, probes)
-      else Similarity.knnJoinIvfSized(emb, k, probes)
+    val knn = Similarity.knnJoinIvf(emb, IvfSpec(fitted = fittedBook, probes = probes), k)
     val pairs = knn
       .select(least(col("query_id"), col("corpus_id")).as("pa"),
         greatest(col("query_id"), col("corpus_id")).as("pb"), col("cos"))

@@ -7,6 +7,84 @@ import org.apache.spark.sql.functions._
 import graft.functions.Codebooks
 import graft.functions.VectorFunctions._
 
+/** One IVF top-k configuration — every serving row (batch, stream, Cli)
+  * and the kNN graph build is one of these. The fields are exactly the
+  * axes the registered rows vary on:
+  *
+  *   - `mips`: cosine, or maximum inner product via the Bachrach
+  *     norm-augmentation reduction (RecSys'14: corpus vectors append
+  *     sqrt(M² − ‖x‖²) with M the corpus max norm, queries append 0, so
+  *     augmented-space cosine order is raw inner-product order);
+  *   - `fitted`: the coarse book is the LCG formula book (replayed in
+  *     oracle SQL) or a fixed-point spherical k-means fit;
+  *   - `laddered`: nlist rides [[Similarity.sizedNlist]] and probes ride
+  *     [[Similarity.sizedProbes]] (identity at every gate scale), or the
+  *     book is the fixed 64 and the probe count is taken as is;
+  *   - `codes`: exact rerank of every probed candidate over full
+  *     vectors, or a PQ compact index that scores candidates from codes
+  *     and reads full vectors only for a k·refine shortlist;
+  *   - `probes`: the base probe count ([[Similarity.probesForRecall]]);
+  *   - `refine`: the PQ shortlist width, on the [[Similarity.sizedRefine]]
+  *     ladder times a multiplier, or fixed.
+  */
+final case class IvfSpec(
+    mips: Boolean = false,
+    fitted: Boolean = false,
+    laddered: Boolean = true,
+    codes: IvfSpec.Codes = IvfSpec.Full,
+    probes: Int = 8,
+    refine: IvfSpec.Refine = IvfSpec.Sized(1)) {
+  def pq: Boolean = codes != IvfSpec.Full
+}
+
+object IvfSpec {
+  sealed trait Codes
+  case object Full extends Codes
+  /** The LCG residual book (8×16 cosine, 5×16 over the augmented MIPS
+    * space) — oracle-replayable. */
+  case object PqFormula extends Codes
+  /** A fixed-point per-subspace residual k-means over the first `sample`
+    * vec_ids: `m` subspaces × `k` codes. Against a formula coarse book
+    * this is the "resfit" row; against a fitted one the fully-fitted rows.
+    */
+  final case class PqFitted(m: Int = Codebooks.PqM, k: Int = Codebooks.PqK,
+                            sample: Int = 2048) extends Codes {
+    require(m >= 1 && Codebooks.Dim % m == 0, s"pq m=$m must divide Dim=${Codebooks.Dim}")
+    /** The book's LCG seed rows (base + m·k + code)·Dim + d — one region
+      * per (m, k) shape so no two books share generator positions (§5
+      * ledger): 400 = 8×16, 30000 = 8×64, 40000 = 16×16, 41000 = 16×64.
+      */
+    val seedRowBase: Int = (m, k) match {
+      case (8, 16) => 400
+      case (8, 64) => 30000
+      case (16, 16) => 40000
+      case (16, 64) => 41000
+      case _ => throw new IllegalArgumentException(
+        s"pq book ${m}x$k has no LCG seed region (8x16, 8x64, 16x16, 16x64)")
+    }
+  }
+
+  sealed trait Refine
+  /** Shortlist k · sizedRefine(n) · mul. */
+  final case class Sized(mul: Int) extends Refine
+  /** Shortlist k · width at every corpus size. */
+  final case class Fixed(width: Int) extends Refine
+
+  /** The 16-subspace × 64-code fitted book on an 8192-row sample with a
+    * ×4 shortlist (r17b): recall@10 0.963 at sf1 / 0.875 at sf10 — the
+    * `sim_topk_ivf_pq_fitted_m16` row, its stream twin, `Cli query -q`
+    * and the wide book of `pq_error_card`. */
+  val M16Book: PqFitted = PqFitted(16, 64, 8192)
+  val M16: IvfSpec = IvfSpec(fitted = true, codes = M16Book, refine = Sized(4))
+  /** The laddered fully-fitted serving point (coarse k-means + residual
+    * book fitted against it): `sim_topk_ivf_pq_fitted_sized`, its stream
+    * twin and `Cli query -f`. */
+  val FittedPq: IvfSpec = IvfSpec(fitted = true, codes = PqFitted())
+  /** MIPS over the fixed-64 formula book with the formula PQ codes:
+    * `sim_topk_mips_ivf_pq` and its stream twin. */
+  val MipsPq: IvfSpec = IvfSpec(mips = true, laddered = false, codes = PqFormula)
+}
+
 /** Embedding similarity operators (SURVEY.md §2c): exact cosine top-k as
   * the baseline, random-hyperplane LSH, IVF coarse quantization and
   * IVF-PQ compact-index refinement as the 100-TB paths.
@@ -103,42 +181,17 @@ object Similarity {
     * query. A single-phase window would ship every query's FULL corpus
     * scores to one reducer — the round-1 scale-killer (VERDICT #4).
     * (cos, corpus_id) is a total order, so the result is byte-identical.
-    *
-    * `dedupInWindow` (r18, guide §2.3 — shuffle fewer bytes/passes):
-    * candidate generators whose only duplicates are EXACT row copies
-    * (the kNN bucket join: a pair meeting in two probed buckets scores
-    * to the same IEEE double both times) previously paid a full
-    * candidate-sized `.distinct()` exchange BEFORE this one. The salt
-    * key is a pure function of corpus_id, so every copy of a
-    * (query_id, corpus_id) row lands in the SAME local window, ordered
-    * adjacently by (cos, corpus_id) — one lag() pass drops the copies
-    * inside the exchange this rerank already pays, and the second
-    * window reuses the established sort (no re-exchange, no re-sort;
-    * plan: 2 candidate-sized Exchanges → 1). ONLY correct when
-    * duplicates are exact copies — a caller with same-(q,c)
-    * different-cos rows must keep its own semantics.
+    * Candidates must be unique per (query_id, corpus_id): the IVF paths
+    * are by construction (see [[servingKernels]]), LSH dedups its bands.
     */
   private[graft] def rerankTopKTwoPhase(scored: DataFrame, k: Int,
-                                        saltBuckets: Int = 32,
-                                        dedupInWindow: Boolean = false): DataFrame = {
-    val salted = scored.withColumn("salt", pmod(hash(col("corpus_id")), lit(saltBuckets)))
+                                        saltBuckets: Int = 32): DataFrame = {
     val wLocal = Window.partitionBy(col("query_id"), col("salt"))
       .orderBy(col("cos").desc, col("corpus_id"))
     val wGlobal = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("corpus_id"))
-    val local =
-      if (dedupInWindow) {
-        // copies are adjacent under (cos desc, corpus_id); every
-        // non-first copy sees an identical predecessor (lag reads the
-        // PRE-filter frame, so runs of 3+ copies drop all but the first)
-        salted
-          .withColumn("__pc", lag(col("corpus_id"), 1).over(wLocal))
-          .withColumn("__ps", lag(col("cos"), 1).over(wLocal))
-          .filter(col("__pc").isNull || col("__pc") =!= col("corpus_id") ||
-            !(col("__ps") <=> col("cos")))
-          .drop("__pc", "__ps")
-      } else salted
-    local.withColumn("lrnk", row_number().over(wLocal))
+    scored.withColumn("salt", pmod(hash(col("corpus_id")), lit(saltBuckets)))
+      .withColumn("lrnk", row_number().over(wLocal))
       .filter(col("lrnk") <= k)
       .withColumn("rnk", row_number().over(wGlobal))
       .filter(col("rnk") <= k)
@@ -155,85 +208,211 @@ object Similarity {
       .withColumn("cos", expr("graft_dot(eq, ec)") / (col("nq") * col("nc")))
   }
 
+  /** One spec's kernels over one corpus. Column conventions: the index
+    * side evaluates `bucket`/`codes` over `ev` (the corpus vector,
+    * augmented under MIPS); the probe side evaluates `probes` over a
+    * [[vectors]] frame; `approx` reads (eq, bucket, codes) and `exact`
+    * reads (eq, nq, ec, nc). `refine` is the shortlist multiplier of k.
+    */
+  private[graft] final case class Serving(spec: IvfSpec, corpusVec: Column,
+                                          bucket: Column, probes: Column,
+                                          codes: Column, approx: Column,
+                                          exact: Column, refine: Int) {
+    /** The MIPS rows name their score column `ip`. */
+    def named(df: DataFrame): DataFrame =
+      if (spec.mips) df.withColumnRenamed("cos", "ip") else df
+  }
+
+  /** The one place an [[IvfSpec]]'s kernels are built: coarse book (LCG
+    * formula at the ladder's nlist, or the k-means fit), probe count,
+    * PQ book, and the scorers — so batch, stream and Cli land vectors in
+    * identical buckets and score them identically. Formula books are
+    * pure functions of (metric, nlist, probes) and register once per
+    * session under that name; fitted books register under fresh names.
+    *
+    * `n` is the corpus count the ladders and the fit sample read — the
+    * caller's single count (r18 VERDICT #6: every fitted row used to
+    * count again inside each fit). It is intentionally per-invocation:
+    * a cached count would serve a stale nlist after an append.
+    *
+    * Candidate uniqueness is settled here, by construction: a corpus
+    * vector has exactly one bucket and [[graft.functions.IvfProbes]]
+    * emits each bucket at most once, so the probe join yields each
+    * (query, candidate) pair once — no IVF path needs a dedup pass.
+    */
+  private[graft] def servingKernels(emb: DataFrame, isQuery: Column,
+                                    spec: IvfSpec, n: Long): Serving = {
+    import IvfSpec._
+    require(!(spec.mips && spec.codes.isInstanceOf[PqFitted]),
+      "fitted PQ books are cosine-only (the MIPS PQ row serves the formula book)")
+    val nlist = if (spec.laddered) sizedNlist(n) else NCentroids
+    val probes = if (spec.laddered) sizedProbes(spec.probes, n) else spec.probes
+    // M = the corpus max norm: a one-row driver maximum, interpolated
+    // as the same literal into both engines' arithmetic. IEEE: nrm <= M
+    // implies nrm·nrm <= M·M under round-to-nearest, so the sqrt
+    // argument is never negative.
+    val maxNorm = if (spec.mips)
+      vectors(emb).filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0) else 0.0
+    def queryVec(e: Column): Column =
+      if (spec.mips) concat(e, array(lit(0.0))) else e
+    val corpusVec = if (!spec.mips) col("e")
+      else concat(col("e"), array(sqrt(lit(maxNorm) * lit(maxNorm) - col("nrm") * col("nrm"))))
+    val modulus = sizedKmFitModulus(n)
+    val cents: Array[Array[Double]] = (spec.mips, spec.fitted) match {
+      case (false, false) => Codebooks.centroidsFor(nlist).map(_.toArray).toArray
+      case (true, false) => Codebooks.mipsCentroidsFor(nlist)
+      case (false, true) => fitCentroids(emb, nlist, 3, modulus)
+      case (true, true) => fitMipsCentroids(emb, isQuery, nlist, maxNorm, modulus)
+    }
+    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+    val tag = if (spec.mips) "mips" else "ivf"
+    def kernel(name: String, fresh: Boolean)(
+        builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+          org.apache.spark.sql.catalyst.expressions.Expression): String =
+      if (fresh) registerFitFunction(emb, s"graft_${tag}_$name")(builder)
+      else { registerOnce(emb, s"graft_${tag}_$name")(builder); s"graft_${tag}_$name" }
+    val bucketFn = kernel(s"bucket_$nlist", spec.fitted)(
+      e => graft.functions.IvfBucket(e.head, cents, cnorms))
+    val probesFn = kernel(s"probes_${nlist}_$probes", spec.fitted)(
+      e => graft.functions.IvfProbes(e.head, probes, cents, cnorms))
+    val pq = spec.codes match {
+      case Full => null
+      case PqFormula => if (spec.mips) Codebooks.mipsPqCents else Codebooks.pqCents
+      // a formula coarse book lives at value scale (LCG/1000): the
+      // residual reference is its fp-normalized twin (the resfit row)
+      case b: PqFitted => fitPqCodebooks(emb, cents, cnorms, b,
+        fpRef = if (spec.fitted) null else Codebooks.fpCentroidsFor(nlist))
+    }
+    val (codes, approx, refine) =
+      if (pq == null) (null, null, 0)
+      else {
+        val hat = cents.zip(cnorms).map { case (c, nn) => c.map(_ / nn) }
+        val fresh = spec.fitted || spec.codes != PqFormula
+        val codeFn = kernel(s"pq_code_$nlist", fresh)(
+          e => graft.functions.PqCode(e.head, cents, cnorms, hat, pq))
+        val scoreFn = kernel(s"pq_score_$nlist", fresh)(
+          e => graft.functions.PqScore(e(0), e(1), e(2), hat, pq))
+        val r = spec.refine match {
+          case Sized(mul) => sizedRefine(n) * mul
+          case Fixed(width) => width
+        }
+        (call_function(codeFn, col("ev")),
+          call_function(scoreFn, queryVec(col("eq")), col("bucket"), col("codes")), r)
+      }
+    val dot = expr("graft_dot(eq, ec)")
+    Serving(spec, corpusVec, call_function(bucketFn, col("ev")),
+      call_function(probesFn, queryVec(col("e"))), codes, approx,
+      if (spec.mips) dot else dot / (col("nq") * col("nc")), refine)
+  }
+
+  /** The corpus side of an index over a [[vectors]] frame: (corpus_id,
+    * bucket) plus the PQ codes of a PQ spec, or the full vector (ec, nc)
+    * otherwise. `ev` is a column of its own so the augmented vector is
+    * built once per row for both kernels.
+    */
+  private[graft] def indexSide(v: DataFrame, s: Serving): DataFrame =
+    v.withColumn("ev", s.corpusVec).select(
+      Seq(col("vec_id").as("corpus_id"), s.bucket.as("bucket")) ++
+        (if (s.spec.pq) Seq(s.codes.as("codes"))
+         else Seq(col("e").as("ec"), col("nrm").as("nc"))): _*)
+
+  /** The query side over a [[vectors]] frame: one row per probed bucket. */
+  private[graft] def probeSide(v: DataFrame, s: Serving): DataFrame =
+    v.select(col("vec_id").as("query_id"), col("e").as("eq"), col("nrm").as("nq"),
+      explode(s.probes).as("bucket"))
+
+  /** IVF-bucketed ANN top-k — the batch plan of every `sim_topk_*` IVF
+    * row. Corpus vectors live in their nearest-centroid bucket (argmax
+    * cosine, first-index tie-break); each query probes its top buckets.
+    * The candidate set is the probed buckets' population ≈ probes·N/nlist
+    * — corpus-growing, so the two-phase salted rerank is mandatory
+    * (round-3 VERDICT #3).
+    *
+    * Full vectors score AT GENERATION: both join sides carry their own
+    * vector and only (query_id, corpus_id, score) rows reach an exchange.
+    * PQ codes score candidates from (bucket, codes) alone, keep the top
+    * k·refine by approximate score, and read full vectors ONLY for that
+    * shortlist (bounded by construction, so its exact rerank is
+    * single-phase) — at 100 TB the shortlist is the only stage that
+    * reads the fat vector table. MIPS rows rank by, and return, the
+    * exact RAW inner product `ip` of the original vectors; recall vs the
+    * exact [[mipsTopK]] / [[bruteForceTopK]] baselines is swept in
+    * SimilaritySpec and RecallSweep.
+    */
+  def ivfTopK(emb: DataFrame, isQuery: Column, spec: IvfSpec, k: Int = 10): DataFrame =
+    ivfTopKAt(emb, isQuery, spec, k, emb.count())
+
+  /** [[ivfTopK]] at an explicit corpus size `n` — the ladders read `n`,
+    * so specs can force a big-book rung at toy scale. */
+  private[graft] def ivfTopKAt(emb: DataFrame, isQuery: Column, spec: IvfSpec,
+                               k: Int, n: Long): DataFrame = {
+    val s = servingKernels(emb, isQuery, spec, n)
+    val v = vectors(emb)
+    val cand = indexSide(v.filter(!isQuery), s)
+      .join(broadcast(probeSide(v.filter(isQuery), s)), "bucket")
+    s.named(
+      if (!spec.pq)
+        rerankTopKTwoPhase(cand.select(col("query_id"), col("corpus_id"), s.exact.as("cos")), k)
+      else {
+        val shortlist = rerankTopKTwoPhase(
+          cand.select(col("query_id"), col("corpus_id"), s.approx.as("cos")), k * s.refine)
+        val exact = shortlist.select(col("query_id"), col("corpus_id"))
+          .join(broadcast(v.filter(isQuery).select(col("vec_id").as("query_id"),
+            col("e").as("eq"), col("nrm").as("nq"))), "query_id")
+          .join(v.select(col("vec_id").as("corpus_id"), col("e").as("ec"),
+            col("nrm").as("nc")), "corpus_id")
+          .select(col("query_id"), col("corpus_id"), s.exact.as("cos"))
+        rerankTopK(exact, k)
+      })
+  }
+
   /** kNN SELF-join over the IVF index — the ANN-graph construction pass
     * (kNN-LM retrieval graphs, SemDeDup neighborhoods, diversity
     * sampling): for EVERY vector, its top-`k` neighbors among the
-    * vectors of its top-`probes` centroid buckets, itself excluded,
-    * exact-cosine scored. Graph-building defaults (k=5, probes=2) are
-    * deliberately tighter than the serving variants' 8 probes.
+    * vectors of its probed buckets, itself excluded, exact-cosine
+    * scored. Graph-building uses tighter probes (the registered rows
+    * run 2) than serving. Formula vs fitted coarse book is the spec's
+    * choice: the KnnSkewBench finding was that tight clusters do NOT
+    * co-bucket under a random book (382/500 planted spokes probed the
+    * hub's bucket at probes=2; 499/500 with the fitted book).
     *
     * Scale shape: total candidates ≈ probes·N²/nlist — with nlist ~ √N
     * that is probes·N^1.5, the accepted ANN-graph cost (the join is
     * bucket-keyed, never all-pairs). Scoring is AT GENERATION (r12):
-    * both sides of the bucket join carry their own vector, the exact
-    * cosine is computed inside the explosion stage, and only the 24-byte
-    * (query_id, corpus_id, cos) row ever reaches an exchange — the
-    * previous form enriched the candidate list against the vector table
-    * through two candidate-keyed joins, which at sf10 meant sorting
-    * 4×10⁸ rows × ~550 B of attached vectors (≈ 220 GB of spill; the
-    * run died on disk). Vectors now move only on the N-sized join
-    * inputs (~550 B × (1 + probes) per vector, once). A pair that meets
-    * in two probed buckets scores to the SAME IEEE double both times
-    * (identical inputs, same fold order), so the distinct collapses it
-    * exactly as the enrich-then-score form did — results are
-    * bit-identical at every scale; the two-phase salted rerank caps the
-    * per-query window population as before.
+    * only the 24-byte (query_id, corpus_id, cos) row ever reaches an
+    * exchange — the previous enrich-then-score form sorted 4×10⁸ rows ×
+    * ~550 B of attached vectors at sf10 (≈ 220 GB of spill). The probe
+    * kernel emits each bucket once, so each pair is generated once and
+    * the two-phase rerank is the only candidate-sized exchange.
     */
-  def knnJoinIvf(emb: DataFrame, k: Int = 5, probes: Int = 2,
-                 nlist: Int = NCentroids, pinWidth: Int = 0): DataFrame = {
-    val (bucketCol, probesCol) =
-      if (nlist == NCentroids)
-        (expr("graft_ivf_bucket(e)"), expr(s"graft_ivf_probes(e, $probes)"))
-      else
-        // the codebook is a pure function of nlist (LCG rows), so the
-        // name-keyed registration can safely be once-per-session (the
-        // ivfTopK wiring)
-        ivfServingExprs(emb, probes, nlist)
-    knnJoinIvfPlan(vectors(emb), k, bucketCol, probesCol, pinWidth)
-  }
-
-  /** [[knnJoinIvf]]'s plan over explicit bucket/probe expressions — the
-    * factoring that lets the FITTED-book graph build
-    * ([[knnJoinIvfFittedSized]]) share the exact candidate/score/rerank
-    * shape (r16, r15 VERDICT #3). */
-  private def knnJoinIvfPlan(v: DataFrame, k: Int, bucketCol: Column,
-                             probesCol: Column, pinWidth: Int): DataFrame = {
-    val corpus = v.select(col("vec_id").as("corpus_id"), bucketCol.as("bucket"),
-      col("e").as("ec"), col("nrm").as("nc"))
-    val queries0 = v.select(col("vec_id").as("query_id"),
-      explode(probesCol).as("bucket"), col("e").as("eq"), col("nrm").as("nq"))
+  def knnJoinIvf(emb: DataFrame, spec: IvfSpec, k: Int = 5): DataFrame = {
+    require(!spec.mips && !spec.pq, "the kNN graph is a full-vector cosine build")
+    val n = emb.count()
+    val s = servingKernels(emb, lit(false), spec, n)
+    val v = vectors(emb)
+    val queries = probeSide(v, s)
     // PRE-EXPLOSION width pin (r12, measured at sf10): the bucket join's
     // input is a few MB of (id, bucket) pairs but its output is
     // probes·N²/nlist candidate rows — AQE sizes exchanges by INPUT
     // bytes, so it coalesces the stage feeding this join to 1-2 tasks
-    // and the candidate generation + partial distinct serializes (2
-    // cores busy on 4×10⁸ rows, >10 min before the pin; AQE's
-    // minPartitionSize floor overrides parallelismFirst on tiny
-    // inputs). An explicit repartition-by-num is a shuffle origin AQE
-    // never coalesces, so the generating stage keeps `pinWidth` tasks.
-    // Engaged N-adaptively by [[knnJoinIvfSized]] — 0 (off) at gate
-    // scales keeps every gated plan and oracle bit-identical.
-    val queries = if (pinWidth > 0)
-      queries0.repartition(pinWidth, col("bucket")) else queries0
-    val scored = corpus.join(queries, "bucket")
+    // and the candidate generation serializes (2 cores busy on 4×10⁸
+    // rows, >10 min before the pin; AQE's minPartitionSize floor
+    // overrides parallelismFirst on tiny inputs). An explicit
+    // repartition-by-num is a shuffle origin AQE never coalesces, so the
+    // generating stage keeps its tasks. Off at gate scales.
+    val width = if (spec.laddered) sizedCandWidth(n, emb) else 0
+    val scored = indexSide(v, s)
+      .join(if (width > 0) queries.repartition(width, col("bucket")) else queries, "bucket")
       .filter(col("query_id") =!= col("corpus_id"))
-      .select(col("query_id"), col("corpus_id"),
-        (expr("graft_dot(eq, ec)") / (col("nq") * col("nc"))).as("cos"))
-    // dedup rides the rerank's salt exchange (r18, guide §2.3): the old
-    // standalone .distinct() was a SECOND candidate-sized exchange; a
-    // pair that meets in two probed buckets scores to the same IEEE
-    // double both times (identical inputs, same fold order), so the
-    // copies are exact and the in-window lag drop is set-identical to
-    // the distinct. Plan: 2 candidate-sized Exchanges → 1 (pinned in
-    // the r18 plan dumps; results bit-identical, oracle-gated).
-    rerankTopKTwoPhase(scored, k, dedupInWindow = true)
+      .select(col("query_id"), col("corpus_id"), s.exact.as("cos"))
+    rerankTopKTwoPhase(scored, k)
   }
 
-  /** The kNN graph's N-ADAPTIVE coarse-quantizer size: nlist tracks √N
-    * (the documented ANN-graph scale knob — candidates ≈ probes·N²/nlist
-    * stay ≈ probes·N^1.5). ≤ 4096 vectors keeps the serving default 64
+  /** The N-ADAPTIVE coarse-quantizer size: nlist tracks √N (candidates ≈
+    * probes·N²/nlist stay ≈ probes·N^1.5 in the graph build, probes·√N
+    * per query in serving). ≤ 4096 vectors keeps the serving default 64
     * and ≤ 65536 keeps the r11 step 128, so every driver-gate scale
-    * (500 / 2,000 / 20,000 vectors) produces the IDENTICAL graph and
+    * (500 / 2,000 / 20,000 vectors) produces the IDENTICAL index and
     * the existing oracles hold unchanged. r12 extends the ladder past
     * the old 200-row cap (512 ≤ 1M, 2048 beyond — the big codebooks
     * generate from the fresh 10000.. LCG region, Codebooks.centroidsFor):
@@ -276,9 +455,7 @@ object Similarity {
     * cost — candidates per query are (base/128)·N, so the price is
     * linear in the base and the choice is a pure cost/recall dial on
     * the existing ladder (edge layout, kernels and plans unchanged).
-    * Callers pass the result as the `probes` argument of
-    * [[ivfTopKSized]] / [[ivfPqTopKSized]] / [[mipsIvfTopK]] /
-    * [[knnJoinIvfSized]].
+    * Callers pass the result as [[IvfSpec]]'s `probes`.
     */
   def probesForRecall(target: String): Int = target match {
     case "standard" => 8
@@ -287,21 +464,6 @@ object Similarity {
       s"probesForRecall: unknown target '$other' (standard | high)")
   }
 
-  /** The candidate-stage width pin, N-adaptive like [[sizedNlist]]: off
-    * (0) at every gate scale — plans and oracles bit-identical — and the
-    * session's shuffle width once the corpus outgrows the 65,536-vector
-    * ladder step, where the pre-explosion AQE mis-coalesce starts to
-    * bite (sf10 measurement: >580 s serialized on 2 tasks → pinned).
-    * Pinning is pure partitioning — every downstream op is
-    * partitioning-invariant by design, so answers never change.
-    * NOTE (r18, measured): lowering the crossover to 8,192 so the
-    * sf0.1 bench (20k vectors, ~6.3M candidates) gets the pin was
-    * tried and REJECTED — an in-session rep-major A/B (ProfCand) put
-    * pin0 AHEAD warm (join 0.91 vs 0.99 s min, pagerank chain 2.14 vs
-    * 2.38 s): at this scale the coalesced candidate stage is one
-    * task's worth of codegen'd work and the extra exchange only adds.
-    * The 65,536 step stands on its sf10 evidence.
-    */
   /** Fit-sample cap for the k-means codebook fits (r17): past it the
     * fit passes scan only the deterministic minstd-id sample, m =
     * ⌈n/KmFitCap⌉ (see [[fitCentroids]]). 65,536 keeps every driver
@@ -326,6 +488,21 @@ object Similarity {
   private def kmFitFilter(m: Long): Column =
     (((col("vec_id") % 2147483647L) * 48271L) % 2147483647L) % m === 0L
 
+  /** The candidate-stage width pin, N-adaptive like [[sizedNlist]]: off
+    * (0) at every gate scale — plans and oracles bit-identical — and the
+    * session's shuffle width once the corpus outgrows the 65,536-vector
+    * ladder step, where the pre-explosion AQE mis-coalesce starts to
+    * bite (sf10 measurement: >580 s serialized on 2 tasks → pinned).
+    * Pinning is pure partitioning — every downstream op is
+    * partitioning-invariant by design, so answers never change.
+    * NOTE (r18, measured): lowering the crossover to 8,192 so the
+    * sf0.1 bench (20k vectors, ~6.3M candidates) gets the pin was
+    * tried and REJECTED — an in-session rep-major A/B put pin0 AHEAD
+    * warm (join 0.91 vs 0.99 s min, pagerank chain 2.14 vs 2.38 s): at
+    * this scale the coalesced candidate stage is one task's worth of
+    * codegen'd work and the extra exchange only adds. The 65,536 step
+    * stands on its sf10 evidence.
+    */
   def sizedCandWidth(n: Long, emb: DataFrame): Int =
     if (n <= 65536) 0
     // the EFFECTIVE shuffle width (SQLConf default included) — a literal
@@ -333,121 +510,21 @@ object Similarity {
     // 32 tasks regardless of cluster width (r12 ADVICE)
     else emb.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** [[knnJoinIvf]] with nlist + probes + candidate width derived from
-    * the corpus (one count) — probes ride [[sizedProbes]] so the probed
-    * fraction (and with it graph recall) holds as nlist climbs the √N
-    * ladder.
+  /** The PQ shortlist's N-ADAPTIVE width (r14 — measured, not assumed:
+    * the RecallSweep evidence shows recall at a FIXED k·4 shortlist
+    * falls ever further below the probe ceiling as bucket population
+    * grows — sf1 cosine-PQ 0.11 vs the 0.80 ceiling, still climbing at
+    * refine=16 — because the PQ approximation's rank noise scales with
+    * the candidates a probe admits, ~N/nlist ≈ √N under the nlist
+    * ladder). Same thresholds as [[sizedNlist]], identity 4 at every
+    * driver-gate scale (plans and oracles unchanged), doubling per
+    * step; mirrored in the PQ oracles' rsizing CTE. The shortlist is
+    * still k·refine rows per query — bounded, so the final exact
+    * rerank stays legitimately single-phase.
     */
-  def knnJoinIvfSized(emb: DataFrame, k: Int = 5, probes: Int = 2): DataFrame = {
-    val n = emb.count()
-    knnJoinIvf(emb, k, sizedProbes(probes, n), sizedNlist(n), sizedCandWidth(n, emb))
-  }
-
-  /** [[knnJoinIvfSized]] over a FITTED coarse book (r16, r15 VERDICT
-    * #3): the graph's quantizer is the laddered fixed-point k-means
-    * ([[fitCentroids]]) instead of the random LCG book — the
-    * KnnSkewBench side-finding was that tight clusters do NOT co-bucket
-    * under a random book (382/500 planted spokes probed the hub's
-    * bucket at probes=2), so graph recall on clustered corpora runs
-    * silently below the isotropic measurement. Same candidate/score/
-    * rerank plan; only the bucket geometry adapts to the data. OPT-IN:
-    * the registered graph rows keep the formula book (their oracles
-    * replay the LCG assignment), exactly like the serving family's
-    * fitted-vs-formula split.
-    */
-  def knnJoinIvfFittedSized(emb: DataFrame, k: Int = 5, probes: Int = 2,
-                            iters: Int = 3): DataFrame = {
-    val n = emb.count()
-    val nlist = sizedNlist(n)
-    val cents = fitCentroidsWithModulus(emb, nlist, iters, sizedKmFitModulus(n))
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    val pb = sizedProbes(probes, n)
-    val bucketName = registerFitFunction(emb, "graft_knn_bucket_fitted")(
-      exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
-    val probesName = registerFitFunction(emb, "graft_knn_probes_fitted")(
-      exprs => graft.functions.IvfProbes(exprs.head, pb, cents, cnorms))
-    knnJoinIvfPlan(vectors(emb), k,
-      call_function(bucketName, col("e")),
-      call_function(probesName, col("e")),
-      sizedCandWidth(n, emb))
-  }
-
-  /** IVF-bucketed ANN: corpus vectors live in their nearest-centroid
-    * bucket (argmax cosine, first-index tie-break); each query probes its
-    * top-`probes` centroid buckets and reranks candidates exactly. The
-    * candidate set is the probed buckets' population ≈ probes·N/nlist —
-    * the 100-TB path when sign-LSH recall is too blunt. `nlist` is the
-    * scale knob (round-3 VERDICT #6: a fixed 16-centroid codebook makes
-    * probed population N/8 — linear in the corpus): size it ~ √N so
-    * probe cost (nlist dots/row) and per-bucket rerank population
-    * (N/nlist) balance; the default 64 ≈ √N at the bench scale.
-    */
-  /** [[ivfTopK]] with nlist + probes derived from the corpus (one
-    * count) — the registered `sim_topk_ivf` path since late r15,
-    * closing the documented opposite-trade note: the plain cosine
-    * serving row was the last fixed-64-book surface, so its probed
-    * population (8/64 of the corpus) stayed a LINEAR fraction at every
-    * scale. Riding [[sizedNlist]] + [[sizedProbes]] pins the fraction
-    * the way the MIPS serving row already does (identity at every
-    * DuckDB-gated scale — plans and oracles unchanged through sf0.1 —
-    * nlist 128 at sf1, the √N ladder beyond); the oracle mirrors via
-    * nlsizing/psizing CTEs, so one static text gates every sf.
-    *
-    * The sizing count() is INTENTIONALLY per-invocation (the
-    * mipsIvfTopK precedent, r15 ADVICE adjudication): it is the one
-    * job that keeps the ladder a pure function of the CURRENT corpus —
-    * a cached count would silently serve a stale nlist after an
-    * append — and it prices at a metadata-only parquet count next to
-    * the probe join it sizes.
-    */
-  def ivfTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
-                   probes: Int = 8): DataFrame = {
-    val n = emb.count()
-    ivfTopK(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n))
-  }
-
-  def ivfTopK(emb: DataFrame, isQuery: Column, k: Int = 10, probes: Int = 8,
-              nlist: Int = NCentroids): DataFrame = {
-    val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
-    ivfPlan(vectors(emb), isQuery, k, bucketCol, probesCol)
-  }
-
-  /** The name-keyed cosine bucket/probes expressions for an explicit
-    * nlist — shared by batch [[ivfTopK]] and the streaming twin (both
-    * faces MUST land vectors in identical buckets, so the kernel pair
-    * is built in exactly one place). The codebook is a pure function of
-    * nlist (LCG rows), so the once-per-session registration cannot
-    * drift; nlist == the serving default keeps the fixed fused kernels
-    * (and with them every gated plan shape).
-    */
-  private[graft] def ivfServingExprs(emb: DataFrame, probes: Int,
-                                     nlist: Int): (Column, Column) =
-    if (nlist == NCentroids)
-      (expr("graft_ivf_bucket(e)"), expr(s"graft_ivf_probes(e, $probes)"))
-    else {
-      val cents = Codebooks.centroidsFor(nlist).map(_.toArray).toArray
-      val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-      registerOnce(emb, s"graft_ivf_bucket_$nlist")(
-        exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
-      registerOnce(emb, s"graft_ivf_probes_${nlist}_$probes")(
-        exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-      (call_function(s"graft_ivf_bucket_$nlist", col("e")),
-        call_function(s"graft_ivf_probes_${nlist}_$probes", col("e")))
-    }
-
-  private def ivfPlan(v: DataFrame, isQuery: Column, k: Int,
-                      bucketCol: Column, probesCol: Column): DataFrame = {
-    val corpus = v.filter(!isQuery)
-      .select(col("vec_id").as("corpus_id"), bucketCol.as("bucket"))
-    val queries = v.filter(isQuery)
-      .select(col("vec_id").as("query_id"), explode(probesCol).as("bucket"))
-    val cand = corpus.join(broadcast(queries), "bucket")
-      .select(col("query_id"), col("corpus_id"))
-      .distinct()
-    // candidates ≈ probes·N/nlist per query — grows with the corpus, so
-    // the two-phase (salted) rerank is mandatory (round-3 VERDICT #3)
-    rerankTopKTwoPhase(scoreCandidates(cand, v), k)
-  }
+  def sizedRefine(n: Long): Int =
+    if (n <= 4096) 4 else if (n <= 65536) 8
+    else if (n <= 1048576) 16 else 32
 
   /** FIXED-POINT spherical k-means over the corpus (the offline codebook
     * fit a real IVF deployment runs) — engine-exact by construction
@@ -457,7 +534,9 @@ object Similarity {
     * integer-valued fixed-point unit vectors at scale S = 10⁶ — so every
     * step is either exact integer arithmetic or a pinned IEEE shape:
     *
-    *   - seed: the LCG integers, fp-normalized (floor(g·S/‖g‖));
+    *   - seed: the LCG integers, fp-normalized (floor(g·S/‖g‖)), from
+    *     the LADDERED row regions (Codebooks.fpCentroidsFor — identical
+    *     to the r5 seeds at k <= 200, the fresh 10000.. region beyond);
     *   - assignment: argmax of the INTEGER dot x̂·ĉ (first-max tie-break;
     *     the kernel's dot/‖x̂‖ divides every candidate by the same
     *     positive scalar, which cannot reorder or collapse distinct
@@ -474,59 +553,33 @@ object Similarity {
     * (norm ≈ S); every downstream kernel divides by the codebook norm,
     * so serving behavior is identical to unit centroids. The DuckDB
     * oracle unrolls the same recurrence as CTEs (the tokenizer_fit
-    * pattern), which is what flips `sim_topk_ivf_kmeans` /
-    * `sim_topk_ivf_pq_fitted` to full hash gates.
+    * pattern).
     *
-    * The fit SAMPLES deterministically past [[KmFitCap]] rows (r17,
-    * r16 VERDICT #2 — the 100-TB fit shape, now the GATED shape too):
-    * centroid quality needs ~O(k·10³) vectors, not all N, so each of
-    * the `iters` passes scans only ids with minstd-permuted
-    * ((vec_id % 2³¹−1)·48271) % (2³¹−1) ≡ 0 (mod m), m =
-    * ⌈n/KmFitCap⌉ — the [[Pca.sizedFitModulus]] pattern: pure integer
-    * arithmetic BOTH engines replay (48271 is invertible mod the prime
-    * 2³¹−1, so in-range ids map to distinct residues), identity (m=1)
-    * at every DuckDB driver-gate scale and at sf1, ~KmFitCap expected
-    * fit rows beyond. Bucket ASSIGNMENT (and every serving path) still
-    * covers every vector with the fitted codebook — the fit/score
-    * split. Mirrored verbatim in the oracles' kfsizing/vfit CTEs, so
-    * one static oracle text gates every sf; the previous seeded
-    * Bernoulli knob was NOT SQL-replayable, which forced the gated
-    * rows to fit full-corpus (3 fat-column scans at sf10).
+    * The fit SAMPLES deterministically by the modulus `m` (r17, r16
+    * VERDICT #2): each of the `iters` passes scans only ids with
+    * minstd-permuted ((vec_id % 2³¹−1)·48271) % (2³¹−1) ≡ 0 (mod m) —
+    * pure integer arithmetic BOTH engines replay (48271 is invertible
+    * mod the prime 2³¹−1, so in-range ids map to distinct residues).
+    * Callers pass [[sizedKmFitModulus]] of their corpus count: identity
+    * (m=1) at every driver-gate scale and sf1, ~KmFitCap fit rows
+    * beyond. Bucket ASSIGNMENT (and every serving path) still covers
+    * every vector — the fit/score split. Mirrored verbatim in the
+    * oracles' kfsizing/vfit CTEs.
     *
     * Overflow headroom: component sums are |x̂ᵢ| ≤ S per row, so BIGINT
-    * holds exact sums to ~9·10¹² rows per cluster — and the modulus
-    * ladder caps expected fit rows near KmFitCap anyway.
+    * holds exact sums to ~9·10¹² rows per cluster.
     */
-  def fitCentroids(emb: DataFrame, k: Int = NCentroids,
-                   iters: Int = 3): Array[Array[Double]] =
-    fitCentroidsWithModulus(emb, k, iters, sizedKmFitModulus(emb.count()))
-
-  /** [[fitCentroids]] with an EXPLICIT fit modulus — the spec hook: at
-    * driver scales the ladder is identity, so the sampled arm is pinned
-    * by forcing m > 1 and asserting equality with a pre-filtered fit.
-    */
-  private[graft] def fitCentroidsWithModulus(emb: DataFrame, k: Int,
-                                             iters: Int, m: Long): Array[Array[Double]] = {
-    // seeds come from the LADDERED LCG row regions (r16 — the fitted
-    // serving ladder needs √N books): fpCentroidsFor == seedCentroidsFp
-    // bit-for-bit at k <= 200 (same rows, same fp normalize), and the
-    // fresh 10000.. region beyond — so every previously-gated fit is
-    // unchanged and big fits never share generator rows with small ones
+  private[graft] def fitCentroids(emb: DataFrame, k: Int, iters: Int,
+                                  m: Long): Array[Array[Double]] = {
     require(k >= 1 && k <= 2048,
       s"k=$k out of range: the LCG seed ladder provides 1..2048 centroids")
     require(m >= 1L, s"fit modulus must be >= 1, got $m")
     // NOTE (r18, measured): spreading/repartitioning this fit frame was
     // tried and REJECTED — the per-round cost is ~0.3 s of JOB overhead
-    // at any partition count (1/2/4/8/32 all ~0.3 s/round warm,
-    // ProfFit2), not assign compute, so a width repair buys nothing and
-    // the raw-row exchange adds cost. The fix that works is below:
-    // the sample is ≤ KmFitCap rows BY DESIGN, so the recurrence runs
-    // DRIVER-LOCAL on one collected sample (the tokenizer_fit
-    // fitLocal / fitPqCodebooks precedent) — 1 job instead of 1+iters.
+    // at any partition count, not assign compute, so a width repair
+    // buys nothing. The sample is ≤ KmFitCap rows BY DESIGN, so the
+    // recurrence runs DRIVER-LOCAL on one collected sample.
     val base = vectors(emb)
-    // x̂ computed ONCE — the loop's 64 element_at references (in the
-    // distributed spec twin) read a stored array, never re-evaluate
-    // the kernel (the HOF-inlining landmine, SURVEY §5)
     val v = (if (m > 1L) base.filter(kmFitFilter(m)) else base)
       .withColumn("xh", expr("graft_fp_unit(e)"))
       .filter(col("xh").isNotNull)
@@ -539,11 +592,9 @@ object Similarity {
     * CONSTRUCTION (the N-adaptive modulus), i.e. model-sized at every
     * corpus scale, so the recurrence collects it ONCE (~32 MB ceiling:
     * KmFitCap × 65 fp doubles) and iterates locally — 1 Spark job
-    * instead of 1 + iters (measured: each distributed round cost ~0.3 s
-    * of pure job overhead at ANY partition count, ProfFit2; the whole
-    * local fit runs in the time one round took). The tokenizer_fit
-    * fitLocal / fitPqCodebooks precedent: fit OFFLINE on the bounded
-    * sample, keep corpus-wide ENCODING distributed.
+    * instead of 1 + iters (each distributed round cost ~0.3 s of pure
+    * job overhead at ANY partition count; the whole local fit runs in
+    * the time one round took).
     *
     * Bit-equality with the distributed form (spec'd in SimilaritySpec):
     * assignment calls the IDENTICAL [[graft.functions.VectorNativeImpl.ivfBucket]]
@@ -551,14 +602,19 @@ object Similarity {
     * exact longs (order-free under any threading), and the truncating
     * division + fpNormalize are shared verbatim. Thread partials merge
     * in fixed (thread, bucket, dim) order — determinism does not depend
-    * on scheduling.
+    * on scheduling. Failures are loud: a row of the wrong width is
+    * rejected before any thread starts, and a worker's exception is
+    * rethrown after the join instead of merging its partial sums.
     */
   private[graft] def fitLoopLocal(v: DataFrame, seeds: Array[Array[Double]],
                                   dim: Int, iters: Int): Array[Array[Double]] = {
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     val rows: Array[org.apache.spark.sql.catalyst.util.ArrayData] =
-      v.collect().map(r =>
-        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](0).toArray))
+      v.collect().map { r =>
+        val a = r.getSeq[Double](0).toArray
+        require(a.length == dim, s"fitLoopLocal: a row has ${a.length} dims, expected $dim")
+        UnsafeArrayData.fromPrimitiveArray(a)
+      }
     var cents = seeds
     val k = seeds.length
     val ones = Array.fill(k)(1.0)
@@ -568,8 +624,9 @@ object Similarity {
       val cur = cents
       val partCnt = Array.ofDim[Long](nThreads, k)
       val partSum = Array.ofDim[Long](nThreads, k, dim)
+      val failures = new Array[Throwable](nThreads)
       val threads = (0 until nThreads).map { t =>
-        val th = new Thread(() => {
+        val th = new Thread(() => try {
           val cnt = partCnt(t); val sm = partSum(t)
           var i = t // strided split — balanced, no chunk arithmetic
           while (i < rows.length) {
@@ -585,10 +642,11 @@ object Similarity {
             }
             i += nThreads
           }
-        })
+        } catch { case e: Throwable => failures(t) = e })
         th.setDaemon(true); th.start(); th
       }
       threads.foreach(_.join())
+      failures.find(_ != null).foreach(e => throw e)
       val next = cur.map(_.clone())
       var b = 0
       while (b < k) {
@@ -659,362 +717,78 @@ object Similarity {
 
   /** FIXED-POINT k-means over the AUGMENTED (Dim+1)-dim MIPS space (r15
     * VERDICT #6): the [[fitCentroids]] recurrence run on the Bachrach
-    * reduction's vectors (corpus rows append sqrt(M²−‖x‖²), queries a
-    * 0 — the exact serving augmentation, so the fitted clusters match
-    * the geometry the index serves), seeded from the rows-600 MIPS LCG
-    * integers (the seed == formula-book pattern [[Codebooks.seedCentroidsFp]]
-    * sets). Engine-exact end to end: the augmented components are fixed
-    * IEEE shapes over the exact corpus max norm, the rest is the integer
-    * recurrence — so the fitted book unrolls as DuckDB CTEs and the
-    * serving row full-hash-gates, like the cosine kmeans rows.
+    * reduction's vectors (corpus rows append sqrt(M²−‖x‖²) for the
+    * corpus max norm `maxNorm`, queries a 0 — the exact serving
+    * augmentation, so the fitted clusters match the geometry the index
+    * serves), seeded from the laddered MIPS LCG regions
+    * (fpMipsCentroidsFor — the rows-600 integers at k <= 64, the fresh
+    * 20000.. region beyond). Engine-exact end to end, so the fitted
+    * book unrolls as DuckDB CTEs and the serving row full-hash-gates.
+    * The fit sample is the [[fitCentroids]] modulus sample; the
+    * max-norm scan and bucket ASSIGNMENT still cover every vector.
     */
-  private[graft] def fitMipsCentroids(emb: DataFrame, isQuery: Column,
-                                      k: Int = NCentroids,
-                                      iters: Int = 3): Array[Array[Double]] = {
+  private[graft] def fitMipsCentroids(emb: DataFrame, isQuery: Column, k: Int,
+                                      maxNorm: Double, m: Long): Array[Array[Double]] = {
     val v0 = vectors(emb)
-    val m = v0.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
-    // the deterministic minstd fit sample, exactly as in
-    // [[fitCentroids]] (r17): centroid quality needs O(k·10³) vectors,
-    // not all N, while the max-norm scan and bucket ASSIGNMENT still
-    // cover every vector — identity at every gated scale through sf1,
-    // SQL-replayable via the oracle's kfsizing/vfit CTEs beyond
-    val fm = sizedKmFitModulus(emb.count())
-    val base = if (fm > 1L) v0.filter(kmFitFilter(fm)) else v0
+    val base = if (m > 1L) v0.filter(kmFitFilter(m)) else v0
     val va = base.withColumn("ea",
         when(isQuery, concat(col("e"), array(lit(0.0))))
           .otherwise(concat(col("e"),
-            array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm"))))))
+            array(sqrt(lit(maxNorm) * lit(maxNorm) - col("nrm") * col("nrm"))))))
       .withColumn("xh", expr("graft_fp_unit(ea)"))
       .filter(col("xh").isNotNull)
       .select(col("xh"))
-    // seeds from the LADDERED MIPS regions (r16): fpMipsCentroidsFor ==
-    // seedMipsCentroidsFp bit-for-bit at k <= 64, the fresh 20000..
-    // region beyond — laddered fits without touching gated small fits
-    fitLoopLocal(va, Codebooks.fpMipsCentroidsFor(k), Dim + 1, iters)
-  }
-
-  /** MIPS-IVF over the DATA-FITTED augmented codebook — the
-    * sim_topk_ivf_kmeans parity for the MIPS family (r15 VERDICT #6:
-    * the cosine IVF had fitted books since r5, the MIPS rows ran
-    * formula books only): fit spherical k-means in the augmented space,
-    * bake the fitted book into the same fused bucket/probe kernels,
-    * then the identical candidate/exact-raw-ip/rerank plan as
-    * [[mipsIvfTopKNlist]]. Recall vs the exact [[mipsTopK]] baseline —
-    * and vs the LCG formula book — is swept in SimilaritySpec.
-    */
-  def mipsIvfTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
-                        probes: Int = 8, iters: Int = 3): DataFrame =
-    mipsIvfTopKFittedNlist(emb, isQuery, k, probes, NCentroids, iters)
-
-  /** [[mipsIvfTopKFitted]] on the CORPUS LADDERS (r16 — the MIPS face
-    * of the fitted serving ladder): the augmented-space k-means fits
-    * [[sizedNlist]] books (seeds from the laddered MIPS LCG regions)
-    * and probes ride [[sizedProbes]] — identity at every driver-gate
-    * scale, so the gated small-fit oracles hold unchanged; the
-    * registered `sim_topk_mips_ivf_fitted` path since r16.
-    */
-  def mipsIvfTopKFittedSized(emb: DataFrame, isQuery: Column, k: Int = 10,
-                             probes: Int = 8, iters: Int = 3): DataFrame = {
-    val n = emb.count()
-    mipsIvfTopKFittedNlist(emb, isQuery, k, sizedProbes(probes, n),
-      sizedNlist(n), iters)
-  }
-
-  def mipsIvfTopKFittedNlist(emb: DataFrame, isQuery: Column, k: Int = 10,
-                             probes: Int = 8, nlist: Int = NCentroids,
-                             iters: Int = 3): DataFrame = {
-    val cents = fitMipsCentroids(emb, isQuery, nlist, iters)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    val bucketName = registerFitFunction(emb, "graft_mips_bucket_fitted")(
-      exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
-    val probesName = registerFitFunction(emb, "graft_mips_probes_fitted")(
-      exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-    val v = vectors(emb)
-    val m = v.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
-    val corpus = v.filter(!isQuery)
-      .withColumn("ea",
-        concat(col("e"), array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm")))))
-      .select(col("vec_id").as("corpus_id"),
-        call_function(bucketName, col("ea")).as("bucket"),
-        col("e").as("ec"))
-    val queries = v.filter(isQuery)
-      .withColumn("ea", concat(col("e"), array(lit(0.0))))
-      .select(col("vec_id").as("query_id"),
-        explode(call_function(probesName, col("ea"))).as("bucket"),
-        col("e").as("eq"))
-    val scored = corpus.join(broadcast(queries), "bucket")
-      .select(col("query_id"), col("corpus_id"),
-        expr("graft_dot(eq, ec)").as("cos"))
-      .distinct()
-    rerankTopKTwoPhase(scored, k).withColumnRenamed("cos", "ip")
-  }
-
-  /** IVF ANN over a DATA-DERIVED codebook: fit spherical k-means on the
-    * corpus, bake the fitted codebook into the same fused kernels (one
-    * JVM call per row — session-registered since the codebook is a
-    * runtime value), then run the identical bucket/probe/rerank plan.
-    * Recall-vs-probes is characterized in SimilaritySpec; on this
-    * isotropic corpus the fitted codebook beats the LCG codebook at every
-    * probe count (measured at sf0.001: 0.45 vs 0.30 recall@10 at the
-    * default 8/64 probes; 0.975 at 48 probes).
-    */
-  def ivfTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
-                    probes: Int = 8, iters: Int = 3): DataFrame = {
-    val cents = fitCentroids(emb, NCentroids, iters)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    // per-fit names; the builders close over THIS fit's immutable arrays
-    val bucketName = registerFitFunction(emb, "graft_ivf_bucket_fitted")(
-      exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
-    val probesName = registerFitFunction(emb, "graft_ivf_probes_fitted")(
-      exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-    val v = vectors(emb)
-    ivfPlan(v, isQuery, k,
-      call_function(bucketName, col("e")),
-      call_function(probesName, col("e")))
-  }
-
-  /** IVF-PQ ANN — the compact-index 100-TB refinement of [[ivfTopK]]:
-    * corpus vectors live in the index as (coarse bucket, 8 PQ residual
-    * codes) — ~12 bytes instead of 64 doubles — so candidate generation
-    * AND approximate scoring never touch full vectors. Per query:
-    * (1) probe the top-`probes` coarse buckets; (2) score every candidate
-    * by the PQ approximation q̂·(ĉ_b + Σ_m pq_m[code_m]) from the codes
-    * alone; (3) keep the top k·`refine` by approximate score (two-phase —
-    * probed population grows with the corpus); (4) fetch full vectors for
-    * ONLY that shortlist and rerank exactly. At 100 TB step 4 is the only
-    * stage that reads the fat vector table, k·refine rows per query.
-    * Recall vs plain IVF is characterized in SimilaritySpec; `refine`
-    * trades recall against full-vector reads.
-    */
-  /** The PQ shortlist's N-ADAPTIVE width (r14 — measured, not assumed:
-    * the RecallSweep evidence shows recall at a FIXED k·4 shortlist
-    * falls ever further below the probe ceiling as bucket population
-    * grows — sf1 cosine-PQ 0.11 vs the 0.80 ceiling, still climbing at
-    * refine=16 — because the PQ approximation's rank noise scales with
-    * the candidates a probe admits, ~N/nlist ≈ √N under the nlist
-    * ladder). Same thresholds as [[sizedNlist]], identity 4 at every
-    * driver-gate scale (plans and oracles unchanged), doubling per
-    * step; mirrored in the PQ oracles' rsizing CTE. The shortlist is
-    * still k·refine rows per query — bounded, so the final exact
-    * rerank stays legitimately single-phase.
-    */
-  def sizedRefine(n: Long): Int =
-    if (n <= 4096) 4 else if (n <= 65536) 8
-    else if (n <= 1048576) 16 else 32
-
-  /** [[ivfPqTopK]] with the shortlist width AND the coarse books on the
-    * corpus-derived ladders — the registered `sim_topk_ivf_pq` path.
-    * Late r15 (completing the serving-ladder family): nlist + probes
-    * ride sizedNlist/sizedProbes exactly like the full-vector rows —
-    * identity books at every driver-gated scale — and refine keeps its
-    * r14 rsizing ladder. The residual PQ book is nlist-INDEPENDENT
-    * (the same 8×16×8 LCG sub-codebooks quantize residuals against
-    * whichever coarse centroid the vector landed on), so a bigger
-    * coarse book needs no new LCG region: only the coarse cents /
-    * norms / hats swap, which the pluggable PqCode/PqScore kernels
-    * take as constructor references. (The sizing count() is
-    * per-invocation by design — see [[ivfTopKSized]]'s note.)
-    */
-  def ivfPqTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
-                     probes: Int = 8): DataFrame = {
-    val n = emb.count()
-    ivfPqTopKNlist(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n),
-      sizedRefine(n))
-  }
-
-  /** [[ivfPqTopK]] with an explicit coarse codebook size (the ladder
-    * calls this with [[sizedNlist]]; specs pin small-vs-big shape). */
-  def ivfPqTopKNlist(emb: DataFrame, isQuery: Column, k: Int = 10,
-                     probes: Int = 8, nlist: Int = NCentroids,
-                     refine: Int = 4): DataFrame = {
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqServingExprs(emb, probes, nlist)
-    ivfPqPlan(vectors(emb), isQuery, k, refine, bucketCol, probesCol,
-      codeCol, scoreCol)
-  }
-
-  /** The PQ serving kernel quartet (bucket, probes, code, score) for an
-    * explicit nlist — the [[ivfServingExprs]] pattern extended to the
-    * compact index: batch and the streaming twin must encode AND score
-    * identically, so the pluggable-codebook kernels are constructed in
-    * exactly one place. The residual PQ book is shared across every
-    * coarse size (it quantizes residuals against whichever ĉ the vector
-    * landed on); only the coarse references swap per nlist.
-    */
-  private[graft] def pqServingExprs(emb: DataFrame, probes: Int,
-                                    nlist: Int): (Column, Column, Column, Column) = {
-    val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
-    if (nlist == NCentroids)
-      (bucketCol, probesCol, expr("graft_pq_code(e)"),
-        expr("graft_pq_score(eq, bucket, codes)"))
-    else {
-      val cents = Codebooks.centroidsFor(nlist).map(_.toArray).toArray
-      val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-      val centsHat = cents.zip(cnorms).map { case (c, nn) => c.map(_ / nn) }
-      registerOnce(emb, s"graft_pq_code_$nlist")(exprs =>
-        graft.functions.PqCode(exprs.head, cents, cnorms, centsHat,
-          Codebooks.pqCents))
-      registerOnce(emb, s"graft_pq_score_$nlist")(exprs =>
-        graft.functions.PqScore(exprs(0), exprs(1), exprs(2), centsHat,
-          Codebooks.pqCents))
-      (bucketCol, probesCol,
-        call_function(s"graft_pq_code_$nlist", col("e")),
-        call_function(s"graft_pq_score_$nlist",
-          col("eq"), col("bucket"), col("codes")))
-    }
-  }
-
-  /** The FITTED-residual-book serving quartet (r16, r15 VERDICT #1):
-    * the [[pqServingExprs]] shape with the formula residual book
-    * replaced by a per-subspace residual k-means fit against the SAME
-    * laddered coarse book — coarse bucket/probes stay the shared
-    * [[ivfServingExprs]] kernels (value-book assignment, byte-identical
-    * to the formula row's buckets), only the code/score kernels carry
-    * the fitted book. The fit is [[fitPqCodebooks]] over the fp
-    * residuals x̂ − ĉfp (ĉfp = [[Codebooks.fpCentroidsFor]], the
-    * fp-normalized twin of the laddered value book) — engine-exact, so
-    * the oracle unrolls it as CTEs and the row full-hash-gates at every
-    * scale. The fit is DETERMINISTIC (first-maxSample sample, integer
-    * arithmetic), so batch and the streaming twin each calling this
-    * builder produce bit-identical books — the kernel-sharing
-    * guarantee the fixed-book rows get from registerOnce.
-    *
-    * Why this beats the formula book at scale (measured, RecallSweep):
-    * the sized serving row's recall fell to 0.100 at sf10 because the
-    * /4000-scale LCG residual book is blind to the residual
-    * distribution the √N coarse books actually produce — finer coarse
-    * books shrink residual norms, and a fixed-scale random book wastes
-    * its cells. The fitted book adapts per subspace to exactly those
-    * residuals.
-    */
-  private[graft] def pqResFitServingExprs(emb: DataFrame, probes: Int,
-                                          nlist: Int): (Column, Column, Column, Column) = {
-    val (bucketCol, probesCol) = ivfServingExprs(emb, probes, nlist)
-    val (cents, cnorms) =
-      if (nlist == NCentroids) (Codebooks.centroidsArr, Codebooks.centroidNorms)
-      else {
-        val cs = Codebooks.centroidsFor(nlist).map(_.toArray).toArray
-        (cs, cs.map(c => math.sqrt(c.map(x => x * x).sum)))
-      }
-    val centsHat = cents.zip(cnorms).map { case (c, n) => c.map(_ / n) }
-    val pq = fitPqCodebooks(emb, cents, cnorms,
-      fpRef = Codebooks.fpCentroidsFor(nlist))
-    val codeName = registerFitFunction(emb, s"graft_pq_code_resfit_$nlist")(
-      exprs => graft.functions.PqCode(exprs.head, cents, cnorms, centsHat, pq))
-    val scoreName = registerFitFunction(emb, s"graft_pq_score_resfit_$nlist")(
-      exprs => graft.functions.PqScore(exprs(0), exprs(1), exprs(2), centsHat, pq))
-    (bucketCol, probesCol,
-      call_function(codeName, col("e")),
-      call_function(scoreName, col("eq"), col("bucket"), col("codes")))
-  }
-
-  /** [[ivfPqTopKSized]] with the FITTED residual book — the registered
-    * `sim_topk_ivf_pq_resfit` path: coarse books, probes and the
-    * shortlist width all on the corpus-derived ladders, residual codes
-    * from the data-fitted sub-codebooks. */
-  def ivfPqTopKResFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
-                         probes: Int = 8): DataFrame = {
-    val n = emb.count()
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqResFitServingExprs(emb, sizedProbes(probes, n), sizedNlist(n))
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n), bucketCol, probesCol,
-      codeCol, scoreCol)
-  }
-
-  def ivfPqTopK(emb: DataFrame, isQuery: Column, k: Int = 10, probes: Int = 8,
-                refine: Int = 4): DataFrame =
-    ivfPqPlan(vectors(emb), isQuery, k, refine,
-      expr("graft_ivf_bucket(e)"),
-      expr(s"graft_ivf_probes(e, $probes)"),
-      expr("graft_pq_code(e)"),
-      expr("graft_pq_score(eq, bucket, codes)"))
-
-  private def ivfPqPlan(v: DataFrame, isQuery: Column, k: Int, refine: Int,
-                        bucketCol: Column, probesCol: Column,
-                        codeCol: Column, scoreCol: Column): DataFrame = {
-    val corpusIdx = v.filter(!isQuery)
-      .select(col("vec_id").as("corpus_id"),
-        bucketCol.as("bucket"), codeCol.as("codes"))
-    val queries = v.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("e").as("eq"),
-        explode(probesCol).as("bucket"))
-    // a corpus vector has exactly one bucket and a query's probes are
-    // distinct, so the probe join yields each (query, candidate) once
-    val approx = corpusIdx.join(broadcast(queries), "bucket")
-      .select(col("query_id"), col("corpus_id"), scoreCol.as("cos"))
-    val shortlist = rerankTopKTwoPhase(approx, k * refine)
-      .select(col("query_id"), col("corpus_id"))
-    // only the shortlist (k·refine rows/query — bounded by construction,
-    // so the final rerank is legitimately single-phase) reads full vectors
-    rerankTopK(scoreCandidates(shortlist, v), k)
+    fitLoopLocal(va, Codebooks.fpMipsCentroidsFor(k), Dim + 1, iters = 3)
   }
 
   /** Offline PQ residual sub-codebook fit — the data-derived twin of the
     * LCG [[graft.functions.Codebooks.pqCents]] (round-4 VERDICT #6), in
-    * FIXED POINT (round-11 VERDICT #1): per subspace m, plain L2
-    * k-means (PqK codes, first-min assignment, empty codes keep their
+    * FIXED POINT (round-11 VERDICT #1): per subspace, plain L2 k-means
+    * (`book.k` codes, first-min assignment, empty codes keep their
     * previous center) over the INTEGER residual subvectors x̂ − ĉfp_b
     * (both sides fixed-point at scale S = 10⁶, so residuals, distances,
     * sums and the truncating-division means are all exact integers —
     * order-free, engine-exact, and replayable as unrolled DuckDB CTEs).
     * The coarse bucket b is the SERVING assignment (IvfBucket over the
-    * raw e with the fitted codebook — the same cluster structure the
-    * encoder uses). Seeds are the LCG integers at the PQ value scale
-    * (·S/4000 = ·250, exact). Returns value-space doubles (fp/S) so the
-    * serving kernels plug them in unchanged.
+    * raw e with `cents`). Seeds are the LCG integers at the PQ value
+    * scale (·S/4000 = ·250, exact) from the book's own region
+    * ([[IvfSpec.PqFitted.seedRowBase]]; the seed row (base + m·k +
+    * code)·Dim + d never collides within a region either, d < sub ≤
+    * Dim). Returns value-space doubles (fp/S) so the serving kernels
+    * plug them in unchanged.
     *
-    * The sample (first `maxSample` vec_ids, collected) is fitting a
-    * MODEL: codebook quality needs O(PqK·10²) residuals per subspace,
-    * not all N — a 100-TB deployment fits exactly like this, offline on
-    * a sample, while ENCODING (pqCode over the corpus) stays
-    * distributed.
+    * The sample (first `book.sample` vec_ids, collected) is fitting a
+    * MODEL: codebook quality needs O(k·10²) residuals per subspace, not
+    * all N — the r17 sf10 finding was that a K=64 book OVERFITS a
+    * 2048-row sample, hence the m16 book's 8192 rows (128 rows/cell,
+    * the narrow book's density).
     *
-    * `fpRef` (r16): the fp-scale residual reference when `cents` is NOT
+    * `fpRef`: the fp-scale residual reference when `cents` is NOT
     * already fp-valued — the laddered FORMULA books live at value scale
     * (LCG/1000), so the residual subtraction needs their fp-normalized
-    * twin ([[Codebooks.fpCentroidsFor]]) while ASSIGNMENT stays on the
-    * value book (the serving kernel's exact argmax). null (the fitted-
-    * coarse callers, whose cents ARE fp-valued) keeps `cents` as both.
+    * twin while ASSIGNMENT stays on the value book. null (fitted coarse
+    * books, which ARE fp-valued) keeps `cents` as both.
     */
-  def fitPqCodebooks(emb: DataFrame, cents: Array[Array[Double]],
-                     cnorms: Array[Double], iters: Int = 5,
-                     maxSample: Int = 2048,
-                     fpRef: Array[Array[Double]] = null,
-                     pqK: Int = Codebooks.PqK,
-                     seedRowBase: Int = 400,
-                     pqM: Int = Codebooks.PqM): Array[Array[Array[Double]]] = {
-    // pqK/seedRowBase (r17): the residual-book WIDTH dial — the kernels
-    // derive (M, K, sub) from the codebook shape, so a wider book needs
-    // only more codes per subspace + a fresh LCG seed region (rows
-    // seedRowBase.., stride Dim — the 30000.. region for the K=64
-    // pricing arm; raw positions stay disjoint from every other region).
-    // pqM (r17b): the subspace-COUNT dial — more, narrower subspaces
-    // halve the per-subspace quantization error at 2× the code bytes
-    // and 2× the (still tiny) per-candidate lookup count. Seeds for a
-    // non-default M live in their own regions (40000.. for 16×16,
-    // 41000.. for 16×64; stride Dim, raw positions disjoint — §5
-    // ledger). The seed FORMULA is (base + m·pqK + k)·Dim + d with
-    // d < pqSub ≤ Dim, so rows never collide within a region either.
-    val PqSub = {
-      require(pqM >= 1 && Dim % pqM == 0, s"pqM=$pqM must divide Dim=$Dim")
-      Dim / pqM
-    }
-    require(pqK >= 1 &&
-      (pqK == Codebooks.PqK && pqM == Codebooks.PqM) == (seedRowBase == 400),
-      s"non-default pqK=$pqK/pqM=$pqM needs its own seed region (got base $seedRowBase)")
+  private[graft] def fitPqCodebooks(emb: DataFrame, cents: Array[Array[Double]],
+                                    cnorms: Array[Double], book: IvfSpec.PqFitted,
+                                    fpRef: Array[Array[Double]] = null,
+                                    iters: Int = 5): Array[Array[Array[Double]]] = {
+    val pqM = book.m
+    val pqK = book.k
+    val pqSub = Dim / pqM
     val S = graft.functions.VectorNativeImpl.FpScale
     val ref = if (fpRef == null) cents else fpRef
     val bucketName = registerFitFunction(emb, "graft_pqfit_assign")(
       exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
     // NOTE (r18, measured): a spread here was tried and REJECTED with
-    // the fitCentroids layout variants (ProfFit2: the sample stage is
+    // the fitCentroids layout variants (the sample stage is
     // job-overhead-bound at these row counts — an exchange only adds)
     val sample = vectors(emb)
       .withColumn("xh", expr("graft_fp_unit(e)"))
       .filter(col("xh").isNotNull)
       .select(col("vec_id"), col("xh"),
         call_function(bucketName, col("e")).as("b"))
-      .orderBy(col("vec_id")).limit(maxSample)
+      .orderBy(col("vec_id")).limit(book.sample)
       .collect()
       .map(r => (r.getSeq[Double](1).toArray, r.getInt(2) - 1))
     // integer residuals per sample vector: x̂ − ĉfp_b, componentwise
@@ -1023,12 +797,12 @@ object Similarity {
     }
     Array.tabulate(pqM) { m =>
       val sub = residuals.map(r =>
-        java.util.Arrays.copyOfRange(r, m * PqSub, (m + 1) * PqSub))
+        java.util.Arrays.copyOfRange(r, m * pqSub, (m + 1) * pqSub))
       // LCG seed at the PQ scale: value/4000 in unit space = raw·250 fp
-      var codes: Array[Array[Long]] = Array.tabulate(pqK, PqSub)((k, d) =>
-        ((1103515245L * ((seedRowBase + m * pqK + k).toLong * Dim + d) + 12345L) % 2001L - 1000L) * 250L)
+      var codes: Array[Array[Long]] = Array.tabulate(pqK, pqSub)((k, d) =>
+        ((1103515245L * ((book.seedRowBase + m * pqK + k).toLong * Dim + d) + 12345L) % 2001L - 1000L) * 250L)
       for (_ <- 0 until iters) {
-        val sums = Array.fill(pqK, PqSub)(0L)
+        val sums = Array.fill(pqK, pqSub)(0L)
         val counts = new Array[Long](pqK)
         sub.foreach { r =>
           var best = 0
@@ -1037,186 +811,46 @@ object Similarity {
           while (kk < pqK) {
             var s = 0L
             var d = 0
-            while (d < PqSub) { val diff = r(d) - codes(kk)(d); s += diff * diff; d += 1 }
+            while (d < pqSub) { val diff = r(d) - codes(kk)(d); s += diff * diff; d += 1 }
             if (s < bestD) { bestD = s; best = kk } // strict < = first-min
             kk += 1
           }
           counts(best) += 1
           var d = 0
-          while (d < PqSub) { sums(best)(d) += r(d); d += 1 }
+          while (d < pqSub) { sums(best)(d) += r(d); d += 1 }
         }
         codes = Array.tabulate(pqK)(kk =>
           if (counts(kk) == 0) codes(kk)
           // truncating long division — DuckDB's `//` semantics
-          else Array.tabulate(PqSub)(d => sums(kk)(d) / counts(kk)))
+          else Array.tabulate(pqSub)(d => sums(kk)(d) / counts(kk)))
       }
       codes.map(_.map(_.toDouble / S))
     }
   }
 
-  /** IVF-PQ over DATA-DERIVED codebooks: spherical-k-means coarse
-    * centroids ([[fitCentroids]]) + per-subspace residual k-means
-    * ([[fitPqCodebooks]]), baked into the same fused PQ kernels under
-    * per-fit function names, then the identical
-    * probe/code-score/shortlist/rerank plan as [[ivfPqTopK]].
-    * Recall-vs-LCG is characterized in SimilaritySpec.
-    */
-  def ivfPqTopKFitted(emb: DataFrame, isQuery: Column, k: Int = 10,
-                      probes: Int = 8, refine: Int = 4, iters: Int = 3): DataFrame =
-    ivfPqPlanFitted(emb, isQuery, k, probes, refine, iters, NCentroids)
-
-  /** The FULLY-FITTED serving quartet at an explicit nlist — the
-    * [[ivfPqTopKFitted]] construction factored so the LADDERED variant
-    * ([[ivfPqTopKFittedSized]]) and the streaming twin share it (the
-    * fit is deterministic, so every caller derives bit-identical
-    * books).
-    */
-  private[graft] def pqFittedServingExprs(emb: DataFrame, probes: Int,
-                                          nlist: Int, iters: Int = 3,
-                                          pqK: Int = graft.functions.Codebooks.PqK,
-                                          pqSeedRowBase: Int = 400,
-                                          pqM: Int = graft.functions.Codebooks.PqM,
-                                          pqFitSample: Int = 2048)
-      : (Column, Column, Column, Column) = {
-    val cents = fitCentroids(emb, nlist, iters)
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    val hat = cents.zip(cnorms).map { case (c, n) => c.map(_ / n) }
-    val pq = fitPqCodebooks(emb, cents, cnorms, pqK = pqK,
-      seedRowBase = pqSeedRowBase, pqM = pqM, maxSample = pqFitSample)
-    val bucketName = registerFitFunction(emb, "graft_ivf_bucket_pqfit")(
-      exprs => graft.functions.IvfBucket(exprs.head, cents, cnorms))
-    val probesName = registerFitFunction(emb, "graft_ivf_probes_pqfit")(
-      exprs => graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-    val codeName = registerFitFunction(emb, "graft_pq_code_fitted")(
-      exprs => graft.functions.PqCode(exprs.head, cents, cnorms, hat, pq))
-    val scoreName = registerFitFunction(emb, "graft_pq_score_fitted")(
-      exprs => graft.functions.PqScore(exprs.head, exprs(1), exprs(2), hat, pq))
-    (call_function(bucketName, col("e")),
-      call_function(probesName, col("e")),
-      call_function(codeName, col("e")),
-      call_function(scoreName, col("eq"), col("bucket"), col("codes")))
-  }
-
-  private def ivfPqPlanFitted(emb: DataFrame, isQuery: Column, k: Int,
-                              probes: Int, refine: Int, iters: Int,
-                              nlist: Int): DataFrame = {
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, probes, nlist, iters)
-    ivfPqPlan(vectors(emb), isQuery, k, refine, bucketCol, probesCol,
-      codeCol, scoreCol)
-  }
-
-  /** The fully-fitted compact index on the CORPUS LADDERS (r16 — the
-    * serving-recall answer the r15 frontier asked for): coarse k-means
-    * at [[sizedNlist]] (seeds from the laddered LCG regions), residual
-    * sub-codebooks fitted against THOSE fitted centroids, probes and
-    * shortlist on [[sizedProbes]]/[[sizedRefine]]. The r16 measurement
-    * that motivates it: against the RANDOM coarse ladder, residuals
-    * keep ~76% of the vector energy and an MSE-optimal residual book
-    * SHRINKS the tail scores that discriminate true matches (recall
-    * fell 0.100 → 0.050 at sf10 even as quantization MSE halved);
-    * fitting the coarse book first compacts clusters so the residual
-    * fit has structure to exploit.
-    */
-  def ivfPqTopKFittedSized(emb: DataFrame, isQuery: Column, k: Int = 10,
-                           probes: Int = 8, iters: Int = 3): DataFrame = {
-    val n = emb.count()
-    ivfPqPlanFitted(emb, isQuery, k, sizedProbes(probes, n), sizedRefine(n),
-      iters, sizedNlist(n))
-  }
-
-  /** Refine-boost pricing arm (r17, r16 VERDICT #1 "also price raising
-    * sizedRefine on the fitted book"): the fitted laddered index with
-    * the shortlist width multiplied — k·refine·mul full-vector reads
-    * per query, the PQ-approximation-noise dial. Measurement surface
-    * for RecallSweep.
-    */
-  def ivfPqTopKFittedSizedRefine(emb: DataFrame, isQuery: Column, k: Int = 10,
-                                 probes: Int = 8, iters: Int = 3,
-                                 refineMul: Int = 2): DataFrame = {
-    val n = emb.count()
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, sizedProbes(probes, n), sizedNlist(n), iters)
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
-      bucketCol, probesCol, codeCol, scoreCol)
-  }
-
-  /** The WIDE-residual-book pricing arm (r17, r16 VERDICT #7): the
-    * fully-fitted laddered index with `pqK` codes per subspace instead
-    * of the default 16 — encode cost scales with pqK (M·pqK·sub
-    * distances per vector) while SERVING score cost is unchanged (M
-    * table lookups + one Dim-length dot per candidate). Seeds come from
-    * the fresh 30000.. LCG region (stride Dim, raw positions disjoint
-    * from every other region). OPT-IN measurement surface — registered
-    * rows stay on the 8×16×8 book unless the RecallSweep numbers say
-    * otherwise (the resfit-style ship-or-reject discipline, §5/§7).
-    */
-  def ivfPqTopKFittedSizedWide(emb: DataFrame, isQuery: Column, k: Int = 10,
-                               probes: Int = 8, iters: Int = 3,
-                               pqK: Int = 64, refineMul: Int = 1): DataFrame = {
-    val n = emb.count()
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, sizedProbes(probes, n), sizedNlist(n), iters,
-        pqK = pqK, pqSeedRowBase = 30000)
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
-      bucketCol, probesCol, codeCol, scoreCol)
-  }
-
-  /** The SHAPED fitted-book measurement surface (r17b): every residual-
-    * book dial exposed at once — subspace count `pqM` (more, narrower
-    * subspaces: quantization error falls, code bytes and the tiny
-    * per-candidate lookup count double), code width `pqK`, and the fit
-    * sample size `pqFitSample` (the r17 sf10 finding: the K=64 book
-    * OVERFITS a 2048-row residual sample — 32 rows/cell vs the narrow
-    * book's 128; pinning rows-per-cell means sample = 2048·(pqK/16)).
-    * `pqSeedRowBase` must be the §5-ledger region matching (pqM, pqK):
-    * 400 = 8×16, 30000 = 8×64, 40000 = 16×16, 41000 = 16×64. OPT-IN
-    * measurement surface feeding RecallSweep — registration follows the
-    * ship-or-reject numbers.
-    */
-  def ivfPqTopKFittedSizedShaped(emb: DataFrame, isQuery: Column, k: Int = 10,
-                                 probes: Int = 8, iters: Int = 3,
-                                 pqM: Int = graft.functions.Codebooks.PqM,
-                                 pqK: Int = graft.functions.Codebooks.PqK,
-                                 pqFitSample: Int = 2048,
-                                 pqSeedRowBase: Int = 400,
-                                 refineMul: Int = 1): DataFrame = {
-    val n = emb.count()
-    val (bucketCol, probesCol, codeCol, scoreCol) =
-      pqFittedServingExprs(emb, sizedProbes(probes, n), sizedNlist(n), iters,
-        pqK = pqK, pqSeedRowBase = pqSeedRowBase, pqM = pqM,
-        pqFitSample = pqFitSample)
-    ivfPqPlan(vectors(emb), isQuery, k, sizedRefine(n) * refineMul,
-      bucketCol, probesCol, codeCol, scoreCol)
-  }
-
   /** PQ QUANTIZATION-ERROR decision card (r17b) — the number a
     * deployment reads before picking a residual book: for EACH
-    * registered book shape (the narrow 8×16 default and the 16×64 m16
-    * serving book), every vector's total squared reconstruction error
-    * Σ_m min_k ‖r_m − pq_m[k]‖² against the SHARED laddered coarse fit,
-    * reduced to one row per book — vector count, the exact error sum
-    * (fixed-point 10⁶ per vector, aggregated in DECIMAL(38,0) so 10⁹⁺
-    * vectors cannot overflow; the fp grid is COARSE by design so an
-    * ulp-level engine divergence cannot flip a trunc boundary — r18,
-    * the 10¹² card broke hash on the driver box), the max, and a
-    * three-band error
-    * histogram (err < 0.1 / < 0.5 / ≥ 0.5 — integer counts, order-free).
-    * The r16/r17 lesson made measurable in-engine: MSE and recall can
-    * DISAGREE (the resfit book halved MSE and halved recall), so the
-    * card pairs with RecallSweep rather than replacing it — but a book
-    * whose error histogram collapses into the high band is flagged
-    * before any recall sweep runs. Scan-shaped: one fused kernel call
-    * per (vector, book), a single aggregate, zero joins or shuffles
-    * beyond the one regroup.
+    * registered book shape (the narrow 8×16 default and the
+    * [[IvfSpec.M16]] serving book), every vector's total squared
+    * reconstruction error Σ_m min_k ‖r_m − pq_m[k]‖² against the SHARED
+    * laddered coarse fit, reduced to one row per book — vector count,
+    * the exact error sum (fixed-point 10⁶ per vector, aggregated in
+    * DECIMAL(38,0) so 10⁹⁺ vectors cannot overflow; the fp grid is
+    * COARSE by design so an ulp-level engine divergence cannot flip a
+    * trunc boundary — r18, the 10¹² card broke hash on the driver box),
+    * the max, and a three-band error histogram (err < 0.1 / < 0.5 /
+    * ≥ 0.5 — integer counts, order-free). MSE and recall can DISAGREE
+    * (the resfit book halved MSE and halved recall), so the card pairs
+    * with RecallSweep rather than replacing it. Scan-shaped: one fused
+    * kernel call per (vector, book), a single aggregate.
     */
   def pqErrorCard(emb: DataFrame): DataFrame = {
     val n = emb.count()
-    val nlist = sizedNlist(n)
-    val cents = fitCentroids(emb, nlist, 3)
+    val cents = fitCentroids(emb, sizedNlist(n), 3, sizedKmFitModulus(n))
     val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
     val hat = cents.zip(cnorms).map { case (c, nn) => c.map(_ / nn) }
-    def bookRow(label: String, pq: Array[Array[Array[Double]]]): DataFrame = {
+    def bookRow(label: String, book: IvfSpec.PqFitted): DataFrame = {
+      val pq = fitPqCodebooks(emb, cents, cnorms, book)
       val errName = registerFitFunction(emb, s"graft_pq_error_$label")(
         exprs => graft.functions.PqError(exprs.head, cents, cnorms, hat, pq))
       vectors(emb)
@@ -1232,12 +866,8 @@ object Similarity {
         .select(lit(label).as("book"), col("n_vecs"), col("sum_err_fp"),
           col("max_err_fp"), col("n_err_lo"), col("n_err_mid"), col("n_err_hi"))
     }
-    val narrow = bookRow("narrow",
-      fitPqCodebooks(emb, cents, cnorms))
-    val m16 = bookRow("m16",
-      fitPqCodebooks(emb, cents, cnorms, maxSample = 8192, pqK = 64,
-        seedRowBase = 41000, pqM = 16))
-    narrow.unionAll(m16).orderBy(col("book"))
+    bookRow("narrow", IvfSpec.PqFitted()).unionAll(bookRow("m16", IvfSpec.M16Book))
+      .orderBy(col("book"))
   }
 
   /** Cosine near-dup pairs: banded-LSH candidates, exact cosine verify.
@@ -1485,168 +1115,6 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .withColumn("cos", expr("graft_dot(eq, ec)"))
     rerankTopKTwoPhase(scored, k).withColumnRenamed("cos", "ip")
-  }
-
-  /** MIPS AT SCALE via the norm-augmentation reduction (r13 — the scale
-    * path [[mipsTopK]]'s doc promises): every CORPUS vector grows a
-    * 65th component sqrt(M² − ‖x‖²) with M = the corpus' max norm (a
-    * one-row driver maximum — the sanctioned one-row-collect category,
-    * interpolated as the same literal into both engines' arithmetic);
-    * every QUERY grows a literal 0. All augmented corpus vectors then
-    * share norm M, so augmented-space COSINE order equals raw
-    * inner-product order (Bachrach et al., RecSys'14) and the standard
-    * IVF machinery applies unchanged over a fresh (Dim+1)-dim LCG
-    * codebook ([[Codebooks.mipsCentroidsArr]]). Candidates come from the
-    * probed augmented buckets ≈ probes·N/nlist — never the whole corpus;
-    * the FINAL scores are the exact raw inner products of the ORIGINAL
-    * vectors (score-at-generation: both join sides carry their own
-    * vector, only (query, corpus, ip) rows reach an exchange), ranked by
-    * the same two-phase salted rerank — so the output is engine-exact
-    * and hash-gates, while recall vs the exact [[mipsTopK]] baseline is
-    * swept in SimilaritySpec. nlist is N-ADAPTIVE through the SAME
-    * [[sizedNlist]] ladder as the cosine IVF (r14, round-13 VERDICT #2 —
-    * the fixed 64 grew candidates as probes·N/64, linear in the corpus;
-    * the ladder keeps them ≈ probes·√N): identity at every gate scale
-    * (≤ 4096 vectors keeps the bit-frozen rows-600 codebook, so gated
-    * plans and oracles are unchanged), √N steps beyond, big codebooks
-    * from the fresh 20000.. LCG row region
-    * ([[graft.functions.Codebooks.mipsCentroidsFor]]). Mirrored in the
-    * oracle's mnlsizing CTE (the nlsizing pattern).
-    *
-    * IEEE note: nrm ≤ M implies nrm·nrm ≤ M·M under round-to-nearest
-    * (multiplication is monotone on non-negatives), so the augmented
-    * component's sqrt argument is never negative.
-    */
-  def mipsIvfTopK(emb: DataFrame, isQuery: Column, k: Int = 10,
-                  probes: Int = 8): DataFrame = {
-    // the sizing count is the whole table (the knnJoinIvfSized shape,
-    // mirrored by the oracle's `FROM embeddings` in mnlsizing); probes
-    // ride the sizedProbes ladder with nlist so the probed fraction —
-    // and the recall ceiling RecallSweep tracks — holds with scale
-    val n = emb.count()
-    mipsIvfTopKNlist(emb, isQuery, k, sizedProbes(probes, n), sizedNlist(n))
-  }
-
-  /** [[mipsIvfTopK]] with an explicit codebook size (the ladder calls
-    * this with [[sizedNlist]]; specs pin small-vs-big equivalence).
-    */
-  def mipsIvfTopKNlist(emb: DataFrame, isQuery: Column, k: Int = 10,
-                       probes: Int = 8, nlist: Int = NCentroids): DataFrame = {
-    val v = vectors(emb)
-    val m = v.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
-    val (cents, cnorms) =
-      if (nlist == NCentroids)
-        (Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms)
-      else {
-        val cs = Codebooks.mipsCentroidsFor(nlist)
-        (cs, cs.map(c => math.sqrt(c.map(x => x * x).sum)))
-      }
-    // name-keyed per nlist (the ivfTopK wiring): the codebook is a pure
-    // function of nlist, so once-per-session registration cannot drift
-    val bucketName =
-      if (nlist == NCentroids) "graft_mips_bucket" else s"graft_mips_bucket_$nlist"
-    val probesName =
-      if (nlist == NCentroids) s"graft_mips_probes_$probes"
-      else s"graft_mips_probes_${nlist}_$probes"
-    registerOnce(emb, bucketName)(exprs =>
-      graft.functions.IvfBucket(exprs.head, cents, cnorms))
-    registerOnce(emb, probesName)(exprs =>
-      graft.functions.IvfProbes(exprs.head, probes, cents, cnorms))
-    val corpus = v.filter(!isQuery)
-      .withColumn("ea",
-        concat(col("e"), array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm")))))
-      .select(col("vec_id").as("corpus_id"),
-        call_function(bucketName, col("ea")).as("bucket"),
-        col("e").as("ec"))
-    val queries = v.filter(isQuery)
-      .withColumn("ea", concat(col("e"), array(lit(0.0))))
-      .select(col("vec_id").as("query_id"),
-        explode(call_function(probesName, col("ea"))).as("bucket"),
-        col("e").as("eq"))
-    val scored = corpus.join(broadcast(queries), "bucket")
-      .select(col("query_id"), col("corpus_id"),
-        expr("graft_dot(eq, ec)").as("cos"))
-      .distinct()
-    rerankTopKTwoPhase(scored, k).withColumnRenamed("cos", "ip")
-  }
-
-  /** PQ-COMPACT MIPS serving (r14, round-13 VERDICT #8): the
-    * codes-resident/shortlist-rerank form of [[mipsIvfTopK]] — the same
-    * Bachrach norm-augmentation reduction, but the candidate index
-    * stores 5 small ints per vector (PQ codes over the AUGMENTED 65-dim
-    * space, which factors as 5 subspaces × 13 dims) instead of 65
-    * doubles, so candidate generation + approximate scoring never touch
-    * the full vectors — the [[ivfPqTopK]] plan shape over the
-    * augmented space. The approximate stage ranks augmented-space
-    * cosines q̂a·(ĉ_b + Σ pq codes) — exactly IP order up to the PQ
-    * approximation — into a k·refine shortlist; the FINAL scores are
-    * the exact RAW inner products of the ORIGINAL vectors, so the
-    * output hash-gates while recall vs exact [[mipsTopK]] is swept in
-    * SimilaritySpec. Codebooks are the serving defaults (the fixed
-    * 64-bucket MIPS coarse book + the fresh rows-700 MIPS-PQ book —
-    * the sim_topk_ivf_pq parity; the nlist ladder lives on the
-    * full-vector [[mipsIvfTopK]] row).
-    */
-  /** Session registration of the MIPS serving kernels at their serving
-    * defaults — shared by [[mipsIvfPqTopK]] and the streaming twin
-    * (SimilarityStream.mipsIvfPqTopKStream), so the two surfaces can
-    * never drift on codebooks.
-    */
-  private[graft] def registerMipsServing(df: DataFrame, probes: Int): Unit = {
-    registerOnce(df, "graft_mips_bucket")(exprs =>
-      graft.functions.IvfBucket(exprs.head,
-        Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms))
-    registerOnce(df, s"graft_mips_probes_$probes")(exprs =>
-      graft.functions.IvfProbes(exprs.head, probes,
-        Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms))
-    registerOnce(df, "graft_mips_pq_code")(exprs =>
-      graft.functions.PqCode(exprs.head,
-        Codebooks.mipsCentroidsArr, Codebooks.mipsCentroidNorms,
-        Codebooks.mipsCentroidsHat, Codebooks.mipsPqCents))
-    registerOnce(df, "graft_mips_pq_score")(exprs =>
-      graft.functions.PqScore(exprs.head, exprs(1), exprs(2),
-        Codebooks.mipsCentroidsHat, Codebooks.mipsPqCents))
-  }
-
-  /** [[mipsIvfPqTopK]] with the shortlist width derived from the corpus
-    * (one count) — the registered `sim_topk_mips_ivf_pq` path. */
-  def mipsIvfPqTopKSized(emb: DataFrame, isQuery: Column, k: Int = 10,
-                         probes: Int = 8): DataFrame =
-    mipsIvfPqTopK(emb, isQuery, k, probes, sizedRefine(emb.count()))
-
-  def mipsIvfPqTopK(emb: DataFrame, isQuery: Column, k: Int = 10,
-                    probes: Int = 8, refine: Int = 4): DataFrame = {
-    val v = vectors(emb)
-    val m = v.filter(!isQuery).agg(max(col("nrm"))).head().getDouble(0)
-    registerMipsServing(emb, probes)
-    // codes-resident corpus index: bucket + 5 ints per vector, no ec
-    val corpusIdx = v.filter(!isQuery)
-      .withColumn("ea",
-        concat(col("e"), array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm")))))
-      .select(col("vec_id").as("corpus_id"),
-        call_function("graft_mips_bucket", col("ea")).as("bucket"),
-        call_function("graft_mips_pq_code", col("ea")).as("codes"))
-    val queries = v.filter(isQuery)
-      .withColumn("eqa", concat(col("e"), array(lit(0.0))))
-      .select(col("vec_id").as("query_id"), col("eqa"),
-        explode(call_function(s"graft_mips_probes_$probes", col("eqa"))).as("bucket"))
-    // a corpus vector has exactly one bucket and a query's probes are
-    // distinct, so the probe join yields each (query, candidate) once
-    val approx = corpusIdx.join(broadcast(queries), "bucket")
-      .select(col("query_id"), col("corpus_id"),
-        call_function("graft_mips_pq_score",
-          col("eqa"), col("bucket"), col("codes")).as("cos"))
-    val shortlist = rerankTopKTwoPhase(approx, k * refine)
-      .select(col("query_id"), col("corpus_id"))
-    // only the shortlist (k·refine rows/query — bounded) reads full
-    // vectors; final scores are the exact RAW inner products
-    val exact = shortlist
-      .join(v.select(col("vec_id").as("corpus_id"), col("e").as("ec")), "corpus_id")
-      .join(broadcast(v.filter(isQuery)
-        .select(col("vec_id").as("query_id"), col("e").as("eq"))), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        expr("graft_dot(eq, ec)").as("cos"))
-    rerankTopK(exact, k).withColumnRenamed("cos", "ip")
   }
 
   /** QUANTIZATION-COLLISION dedup (r15): vectors whose PQ encodings

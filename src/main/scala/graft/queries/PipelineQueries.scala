@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Bpe, Dedup, Multimodal, Similarity, TextOps}
+import graft.operators.{Bpe, Dedup, IvfSpec, Multimodal, Similarity, TextOps}
 import graft.sources.Tables
 
 /** SURVEY.md §2c — the LLM-training-data pipeline ops over `documents` /
@@ -32,6 +32,9 @@ object PipelineQueries {
   // Similarity.knnJoinIvf)
   private val KnnK = 5
   private val KnnProbes = 2
+  import IvfSpec.{FittedPq, MipsPq}
+  private val FittedPqHr = FittedPq.copy(probes = Similarity.probesForRecall("high"))
+  private val FittedPqHq = FittedPq.copy(codes = IvfSpec.PqFitted(k = 64), refine = IvfSpec.Sized(4))
 
   /** Repetition-filter thresholds (text_repetition): chosen so the gate
     * splits this corpus meaningfully (319/500 kept at sf0.01) — real
@@ -185,13 +188,13 @@ object PipelineQueries {
     // a fresh 65-dim LCG codebook, exact raw-ip rerank (engine-exact;
     // recall vs the exact MIPS baseline swept in SimilaritySpec).
     "sim_topk_mips_ivf" -> ((s, dir) =>
-      Similarity.mipsIvfTopK(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred, IvfSpec(mips = true), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // PQ-compact MIPS serving (r14): codes-resident augmented-space
     // index (5×13 PQ over the 65-dim reduction), shortlist by the
     // approximate augmented cosine, exact raw-ip rerank.
     "sim_topk_mips_ivf_pq" -> ((s, dir) =>
-      Similarity.mipsIvfPqTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred, MipsPq, TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // MIPS-IVF over a DATA-FITTED augmented codebook (r15): fixed-point
     // spherical k-means in the 65-dim Bachrach space (seeds = the
@@ -203,7 +206,8 @@ object PipelineQueries {
       // r16: the LADDERED fit (identity at driver scales — fit books
       // ride sizedNlist, probes sizedProbes; oracle mirrors via
       // mnlsizing/mpsizing + the sized fit seeds)
-      Similarity.mipsIvfTopKFittedSized(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred,
+        IvfSpec(mips = true, fitted = true), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     "sim_topk_lsh" -> ((s, dir) =>
       Similarity.lshTopK(Tables.load(s, dir, "embeddings"), queryPred, TopK)
@@ -212,7 +216,7 @@ object PipelineQueries {
     // MIPS serving row's shape): identity books at every DuckDB-gated
     // scale, √N books with a pinned probed fraction beyond
     "sim_topk_ivf" -> ((s, dir) =>
-      Similarity.ivfTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred, IvfSpec(), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // the HIGH-recall-target serving point (r16, r15 VERDICT #2): the
     // same sized serving plan with base probes from
@@ -220,13 +224,13 @@ object PipelineQueries {
     // recovering the 0.8-recall ceiling class at double candidate cost
     // (the r15 sweep's measured trade); one parameter, own oracle
     "sim_topk_ivf_hr" -> ((s, dir) =>
-      Similarity.ivfTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK,
-        probes = Similarity.probesForRecall("high"))
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred,
+        IvfSpec(probes = Similarity.probesForRecall("high")), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // kNN SELF-join (r9): every vector's top-k neighbors over its
     // probed IVF buckets — the ANN-graph construction pass
     "sim_knn_join_ivf" -> ((s, dir) =>
-      Similarity.knnJoinIvfSized(Tables.load(s, dir, "embeddings"), KnnK, KnnProbes)
+      Similarity.knnJoinIvf(Tables.load(s, dir, "embeddings"), IvfSpec(probes = KnnProbes), KnnK)
         .orderBy(col("query_id"), col("rnk"))),
     // PageRank over the kNN similarity graph (r11): the ANN edge list
     // symmetrized into the fixed-point power iteration — representative/
@@ -312,16 +316,18 @@ object PipelineQueries {
     // residual codes) alone; full vectors only for the exact rerank of
     // the top k·refine shortlist (round-3 §7 stretch).
     "sim_topk_ivf_pq" -> ((s, dir) =>
-      Similarity.ivfPqTopKSized(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred,
+        IvfSpec(codes = IvfSpec.PqFormula), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // FITTED residual book on the coarse ladder (r16, r15 VERDICT #1):
     // the same laddered coarse books and sized probes/shortlist, but the
     // residual sub-codebooks come from the per-subspace fixed-point
     // k-means fit against the laddered book — the recall lift the sized
     // formula book left on the table (0.100 @ sf10); fit unrolled as
-    // oracle CTEs, batch and stream share pqResFitServingExprs.
+    // oracle CTEs, batch and stream share Similarity.servingKernels.
     "sim_topk_ivf_pq_resfit" -> ((s, dir) =>
-      Similarity.ivfPqTopKResFitted(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred,
+        IvfSpec(codes = IvfSpec.PqFitted()), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // IVF over a k-means-fitted codebook (the offline fit a production
     // deployment broadcasts). r12: the fit is FIXED-POINT (integer dots,
@@ -329,7 +335,8 @@ object PipelineQueries {
     // so the fitted codebook is engine-exact and the oracle unrolls the
     // fit as CTEs — full hash gate; recall swept in SimilaritySpec.
     "sim_topk_ivf_kmeans" -> ((s, dir) =>
-      Similarity.ivfTopKFitted(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred,
+        IvfSpec(fitted = true, laddered = false), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // IVF-PQ over DATA-DERIVED codebooks: k-means coarse centroids plus
     // per-subspace residual k-means sub-codebooks (round-5 VERDICT #6).
@@ -337,7 +344,8 @@ object PipelineQueries {
     // first-2048 sample) — full hash gate; recall-vs-LCG is swept in
     // SimilaritySpec.
     "sim_topk_ivf_pq_fitted" -> ((s, dir) =>
-      Similarity.ivfPqTopKFitted(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred,
+        FittedPq.copy(laddered = false, refine = IvfSpec.Fixed(4)), TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // fully-fitted compact index on the CORPUS LADDERS (r16): laddered
     // coarse k-means + residual book fitted against it — the
@@ -346,7 +354,7 @@ object PipelineQueries {
     // ladder SHRINKS tail scores and ranks worse — see
     // sim_topk_ivf_pq_resfit's honest negative result).
     "sim_topk_ivf_pq_fitted_sized" -> ((s, dir) =>
-      Similarity.ivfPqTopKFittedSized(Tables.load(s, dir, "embeddings"), queryPred, TopK)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred, FittedPq, TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // the two r16 recall levers COMPOSED (r17, r16 VERDICT #1): the
     // fully-fitted laddered books served at probesForRecall("high") —
@@ -354,8 +362,7 @@ object PipelineQueries {
     // the row above (probes never enter the fit), so the oracle swaps
     // only its psizing base.
     "sim_topk_ivf_pq_fitted_hr" -> ((s, dir) =>
-      Similarity.ivfPqTopKFittedSized(Tables.load(s, dir, "embeddings"), queryPred, TopK,
-        probes = Similarity.probesForRecall("high"))
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred, FittedPqHr, TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // the HIGH-QUALITY fitted serving point (r17, measured winner of
     // the r16 VERDICT #1/#7 frontier): the probe dial is NOT binding on
@@ -366,8 +373,7 @@ object PipelineQueries {
     // Dim-dot), price = 4x offline encode + 4x shortlist vector reads
     // (40 rows/query).
     "sim_topk_ivf_pq_fitted_hq" -> ((s, dir) =>
-      Similarity.ivfPqTopKFittedSizedWide(Tables.load(s, dir, "embeddings"), queryPred, TopK,
-        refineMul = 4)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred, FittedPqHq, TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // the 16-SUBSPACE wide-book serving point (r17b — the measured new
     // frontier): quartering the per-subspace dim was the unswept dial,
@@ -379,9 +385,7 @@ object PipelineQueries {
     // price = 4× offline encode distances and the same 40
     // full-vector shortlist reads/query. Seeds: the 41000.. region.
     "sim_topk_ivf_pq_fitted_m16" -> ((s, dir) =>
-      Similarity.ivfPqTopKFittedSizedShaped(Tables.load(s, dir, "embeddings"), queryPred, TopK,
-        pqM = 16, pqK = 64, pqFitSample = 8192, pqSeedRowBase = 41000,
-        refineMul = 4)
+      Similarity.ivfTopK(Tables.load(s, dir, "embeddings"), queryPred, IvfSpec.M16, TopK)
         .orderBy(col("query_id"), col("rnk"))),
     // the kNN GRAPH BUILD over the fitted laddered book (r17, r16
     // VERDICT #3): identical candidate/score/rerank plan to
@@ -390,7 +394,8 @@ object PipelineQueries {
     // 499/500 at probes=2 vs the LCG book's 382/500 (tight clusters do
     // NOT co-bucket under a random book).
     "sim_knn_join_ivf_fitted" -> ((s, dir) =>
-      Similarity.knnJoinIvfFittedSized(Tables.load(s, dir, "embeddings"), KnnK, KnnProbes)
+      Similarity.knnJoinIvf(Tables.load(s, dir, "embeddings"),
+        IvfSpec(fitted = true, probes = KnnProbes), KnnK)
         .orderBy(col("query_id"), col("rnk"))),
     "text_lang_id" -> ((s, dir) =>
       TextOps.langId(Tables.load(s, dir, "documents")).orderBy(col("doc_id"))),
@@ -1519,22 +1524,17 @@ object PipelineQueries {
        |  FROM orient x JOIN orient y ON y.lo = x.lo AND y.hi > x.hi
        |       JOIN und c ON c.src = x.hi AND c.dst = y.hi)""".stripMargin
 
-  private def pqFitCtes(coarseRef: String, iters: Int, maxSample: Int,
-                        pqK: Int = graft.functions.Codebooks.PqK,
-                        seedRowBase: Int = 400,
-                        pqM: Int = graft.functions.Codebooks.PqM,
+  private def pqFitCtes(coarseRef: String, iters: Int, book: IvfSpec.PqFitted,
                         prefix: String = ""): String = {
-    // pqK/seedRowBase (r17): the residual-book WIDTH dial, mirroring
-    // fitPqCodebooks — the K=64 pricing/serving arm seeds from the
-    // fresh 30000.. LCG region (stride Dim, raw positions disjoint).
-    // pqM (r17b): the subspace-COUNT dial — 40000.. region for 16×16,
-    // 41000.. for 16×64 (the §5 ledger); the CTE text below only ever
-    // references m/sub through these two parameters.
+    // the book's shape (m subspaces × k codes), its fit sample and its
+    // LCG seed region, mirroring fitPqCodebooks; the CTE text below only
+    // ever references them through these values.
     // prefix (r17b): CTE-name prefix so TWO book fits can share one
     // statement (pq_error_card) — "" keeps the text byte-identical for
     // every existing gate.
-    val PqM = pqM
-    val PqSub = graft.functions.Codebooks.Dim / pqM
+    val PqM = book.m
+    val (pqK, maxSample, seedRowBase) = (book.k, book.sample, book.seedRowBase)
+    val PqSub = graft.functions.Codebooks.Dim / PqM
     def p(name: String) = s"$prefix$name"
     val head =
       s""",
@@ -1619,8 +1619,8 @@ object PipelineQueries {
          |, nlsizing AS (SELECT CASE WHEN COUNT(*) <= 4096 THEN $NCentroids
          |  WHEN COUNT(*) <= 65536 THEN 128
          |  WHEN COUNT(*) <= 1048576 THEN 512 ELSE 2048 END AS nl FROM embeddings),
-         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5, 2048)}${
-           pqFitCtes("fc3", 5, 8192, 64, 41000, 16, prefix = "w")},
+         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5, IvfSpec.PqFitted())}${
+           pqFitCtes("fc3", 5, IvfSpec.M16Book, prefix = "w")},
          |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn2),
          |vb AS (SELECT vec_id, list_position(cc, list_max(cc)) AS bucket FROM ccs),
          |vres AS MATERIALIZED (
@@ -1643,14 +1643,12 @@ object PipelineQueries {
     * the fit CTEs are probe-independent, so both registered rows replay
     * the IDENTICAL books.
     */
-  private def ivfPqFittedSizedOracle(baseProbes: Int,
-                                     pqK: Int = graft.functions.Codebooks.PqK,
-                                     pqSeedRowBase: Int = 400,
-                                     refineMul: Int = 1,
-                                     pqM: Int = graft.functions.Codebooks.PqM,
-                                     pqFitSample: Int = 2048): String = {
-    val PqM = pqM
-    val PqSub = graft.functions.Codebooks.Dim / pqM
+  private def ivfPqFittedSizedOracle(spec: IvfSpec): String = {
+    val book = spec.codes.asInstanceOf[IvfSpec.PqFitted]
+    val PqM = book.m
+    val (baseProbes, pqK) = (spec.probes, book.k)
+    val refineMul = spec.refine.asInstanceOf[IvfSpec.Sized].mul
+    val PqSub = graft.functions.Codebooks.Dim / PqM
     val coarse = s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
       s"[q.e[i]/q.nrm * ch.ch[i] for i in generate_series(1,$Dim)]), (s,x) -> s+x)"
     val terms = s"flatten([[q.e[m*$PqSub+d]/q.nrm * pqf.pq[m*$pqK + codes[m+1]][d] " +
@@ -1665,7 +1663,7 @@ object PipelineQueries {
          |rsizing AS (SELECT CASE WHEN COUNT(*) <= 4096 THEN 4
          |    WHEN COUNT(*) <= 65536 THEN 8
          |    WHEN COUNT(*) <= 1048576 THEN 16 ELSE 32 END AS rf FROM embeddings),
-         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5, pqFitSample, pqK, pqSeedRowBase, pqM)},
+         |${kmeansFitCtes(3, sized = true)}${pqFitCtes("fc3", 5, book)},
          |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn2),
          |pqv AS (SELECT m, k, [CAST(x AS DOUBLE)/1000000.0 for x in pv] AS pv FROM pq5),
          |pqf AS (SELECT list(pv ORDER BY m*$pqK + k) AS pq FROM pqv),
@@ -2636,7 +2634,7 @@ object PipelineQueries {
     // IVF with the nlist=64 codebook GENERATED in SQL (same LCG formula
     // as Codebooks.centroidsFor) and the default 8-probe query — probe
     // fraction 8/64 mirrors the kernel defaults exactly.
-    // nlsizing/psizing mirror ivfTopKSized (late r15): identity at the
+    // nlsizing/psizing mirror the laddered IvfSpec (late r15): identity at the
     // driver-gated scales, the √N ladder with a pinned probed fraction
     // beyond — the same one-static-text shape as the MIPS serving oracle
     "sim_topk_ivf" -> (NormCte +
@@ -2933,7 +2931,7 @@ object PipelineQueries {
     // from the per-subspace fixed-point k-means fit (pqFitCtes) over
     // residuals against cfp — the fp-normalized LADDERED book generated
     // from the same raw LCG integers the value book scales /1000 —
-    // mirroring Similarity.pqResFitServingExprs term for term.
+    // mirroring Similarity.servingKernels (formula coarse + PqFitted) term for term.
     // `codes` is MATERIALIZED (unlike the formula row's): with the fit
     // CTEs resident, inlining the 25.6M-row dists aggregate into the
     // probe-join pipeline overruns check_one's 64GB cap at sf10;
@@ -2970,7 +2968,7 @@ object PipelineQueries {
            |  FROM generate_series(0, 2047) AS t(c), nlsizing WHERE c < nl),
            |cfp AS MATERIALIZED (
            |  SELECT c, ${fpn("g", "n2")} AS cv
-           |  FROM (SELECT c, g, ${sumSq("g")} AS n2 FROM crawg))${pqFitCtes("cfp", 5, 2048)},
+           |  FROM (SELECT c, g, ${sumSq("g")} AS n2 FROM crawg))${pqFitCtes("cfp", 5, IvfSpec.PqFitted())},
            |pqv AS (SELECT m, k, [CAST(x AS DOUBLE)/1000000.0 for x in pv] AS pv FROM pq5),
            |pqf AS (SELECT list(pv ORDER BY m*$PqK + k) AS pq FROM pqv),
            |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn),
@@ -3086,28 +3084,25 @@ object PipelineQueries {
     // (ps-driven probes, rf-driven shortlist) over the fitted chat/pqv.
     // Identity to sim_topk_ivf_pq_fitted's books at every driver-gate
     // scale (nl = 64 there) except refine rides rsizing.
-    "sim_topk_ivf_pq_fitted_sized" -> ivfPqFittedSizedOracle(Probes),
+    "sim_topk_ivf_pq_fitted_sized" -> ivfPqFittedSizedOracle(FittedPq),
 
     // the fitted books served at the HIGH recall target (r17): probes
     // never enter the fit, so the oracle is the fitted_sized replay
     // with ONLY its psizing base swapped to 16 (fraction 1/8)
-    "sim_topk_ivf_pq_fitted_hr" -> ivfPqFittedSizedOracle(16),
+    "sim_topk_ivf_pq_fitted_hr" -> ivfPqFittedSizedOracle(FittedPqHr),
 
     // the HIGH-QUALITY fitted serving point (r17 — the measured winning
     // composition): K=64 residual book (30000.. seed region) + the x4
     // shortlist boost at STANDARD probes — the dials that measured
     // binding; same laddered coarse fit CTEs, probe text unchanged
-    "sim_topk_ivf_pq_fitted_hq" -> ivfPqFittedSizedOracle(Probes,
-      pqK = 64, pqSeedRowBase = 30000, refineMul = 4),
+    "sim_topk_ivf_pq_fitted_hq" -> ivfPqFittedSizedOracle(FittedPqHq),
 
     // the 16-subspace wide-book point (r17b): the identical fitted
     // replay with the residual-book shape dials swapped — M=16 (sub=4),
     // K=64, 8192-row fit sample, 41000.. seed region, ×4 shortlist.
     // The coarse fit CTEs are untouched (books shared with the whole
     // fitted family by construction).
-    "sim_topk_ivf_pq_fitted_m16" -> ivfPqFittedSizedOracle(Probes,
-      pqK = 64, pqSeedRowBase = 41000, refineMul = 4, pqM = 16,
-      pqFitSample = 8192),
+    "sim_topk_ivf_pq_fitted_m16" -> ivfPqFittedSizedOracle(IvfSpec.M16),
 
     // the quantization-error decision card: both books, one statement
     "pq_error_card" -> pqErrorCardOracle,
@@ -3156,7 +3151,7 @@ object PipelineQueries {
         s"for d in generate_series(1,$PqSub)] for m in generate_series(0,${PqM - 1})])"
       NormCte +
         s"""
-           |, ${kmeansFitCtes(3)}${pqFitCtes("fc3", 5, 2048)},
+           |, ${kmeansFitCtes(3)}${pqFitCtes("fc3", 5, IvfSpec.PqFitted())},
            |chat AS (SELECT c, [cv[i]/cnrm for i in generate_series(1,$Dim)] AS ch FROM cn2),
            |pqv AS (SELECT m, k, [CAST(x AS DOUBLE)/1000000.0 for x in pv] AS pv FROM pq5),
            |pqf AS (SELECT list(pv ORDER BY m*$PqK + k) AS pq FROM pqv),

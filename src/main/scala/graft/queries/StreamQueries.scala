@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.IvfSpec
 import graft.streaming.{AnomalyStream, AsOfStream, CorpusStream, DedupStream, ImportanceStream, RangeJoinStream, SimilarityStream, SpanStream, TopicStream}
 
 /** SURVEY.md §2a streaming rows — each runs a real Structured Streaming
@@ -141,19 +142,20 @@ object StreamQueries {
     "stream_sim_ivf_pq" -> ((s, dir) => {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_ivf_pq", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      SimilarityStream.ivfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt)
+      SimilarityStream.ivfTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
+        IvfSpec(codes = IvfSpec.PqFormula), tablePrefix = "graft_pq_stream")
         .orderBy(col("query_id"), col("rnk"))
     }),
     // The FITTED-residual-book serving twin (r16): same compact-index
     // stream plan, code/score kernels from the shared
-    // pqResFitServingExprs builder (deterministic fit — batch and
+    // Similarity.servingKernels builder (deterministic fit — batch and
     // stream books bit-identical). Replay reproduces
     // sim_topk_ivf_pq_resfit (batch oracle verbatim).
     "stream_sim_ivf_pq_resfit" -> ((s, dir) => {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_ivf_pq_resfit", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      SimilarityStream.ivfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
-        tablePrefix = "graft_pq_resfit_stream", book = "resfit")
+      SimilarityStream.ivfTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
+        IvfSpec(codes = IvfSpec.PqFitted()), tablePrefix = "graft_pq_resfit_stream")
         .orderBy(col("query_id"), col("rnk"))
     }),
     // The FULLY-fitted serving ladder's twin (r16): laddered coarse
@@ -163,8 +165,8 @@ object StreamQueries {
     "stream_sim_ivf_pq_fitted" -> ((s, dir) => {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_ivf_pq_fitted", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      SimilarityStream.ivfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
-        tablePrefix = "graft_pq_fitted_stream", book = "fitted")
+      SimilarityStream.ivfTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
+        IvfSpec.FittedPq, tablePrefix = "graft_pq_fitted_stream")
         .orderBy(col("query_id"), col("rnk"))
     }),
     // The r17b high-recall serving point's twin: 16-subspace × 64-code
@@ -174,8 +176,8 @@ object StreamQueries {
     "stream_sim_ivf_pq_m16" -> ((s, dir) => {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_ivf_pq_m16", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      SimilarityStream.ivfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
-        tablePrefix = "graft_pq_m16_stream", book = "m16", refineMul = 4)
+      SimilarityStream.ivfTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
+        IvfSpec.M16, tablePrefix = "graft_pq_m16_stream")
         .orderBy(col("query_id"), col("rnk"))
     }),
     // Streaming PQ-compact MIPS serving (r14): codes-resident
@@ -185,7 +187,8 @@ object StreamQueries {
     "stream_sim_mips_pq" -> ((s, dir) => {
       val (out, ckpt) = TopicStream.scratchDirs("stream_sim_mips_pq", dir)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-      SimilarityStream.mipsIvfPqTopKStream(s, s"$dir/embeddings.parquet", out, ckpt)
+      SimilarityStream.ivfTopKStream(s, s"$dir/embeddings.parquet", out, ckpt,
+        IvfSpec.MipsPq, tablePrefix = "graft_mips_pq_stream")
         .orderBy(col("query_id"), col("rnk"))
     }),
     // Streaming quantization-collision dedup (r15): the corpus code

@@ -238,19 +238,6 @@ object DedupStream {
     TopicStream.readBatchedOutput(spark, outDir)
   }
 
-  /** Exact Jaccard pairs between an incoming (doc_id, hs, n_sh) frame and
-    * a corpus hash frame, `corpus_id < new_id` — explodes the corpus
-    * inline. Batch-friendly; streaming callers probe the materialized
-    * exploded index via [[exactJaccardProbeIndexed]] instead.
-    */
-  def exactJaccardProbe(corpusHashes: DataFrame, incomingHashes: DataFrame,
-                        tau: Double = 0.5): DataFrame =
-    exactJaccardProbeIndexed(
-      corpusHashes.select(col("doc_id").as("corpus_id"),
-          col("n_sh").as("na"), explode_outer(col("hs")).as("h"))
-        .filter(col("h").isNotNull),
-      incomingHashes, tau)
-
   /** Exact Jaccard pairs of an incoming (doc_id, hs, n_sh) frame against
     * a pre-exploded corpus inverted index (corpus_id, na, h) — the
     * inverted-index formulation of Dedup.ngramJaccardPairs restricted to

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.operators.Similarity
+import graft.operators.{IvfSpec, Similarity}
 import graft.sources.Bucketing
 
 /** Streaming ANN serving: query vectors arrive as a stream and probe the
@@ -31,285 +31,91 @@ object SimilarityStream {
     */
   val IndexBuckets = 8
 
+  /** The bounded index-serve step, shared by [[ivfTopKStream]] and the
+    * Cli `query` verb: materialize the index, probe it, rerank per
+    * query. The probe index is bucketed by `bucket` — (bucket, codes)
+    * for a PQ spec, (bucket, full vector) otherwise — and a PQ spec
+    * also writes the full-vector rerank table bucketed by `corpus_id`,
+    * so neither static side is ever shuffled after the one-time write.
+    * At scale the fat vectors live exactly like this: a corpus_id-
+    * bucketed store fetched per shortlist.
+    */
+  private[graft] def writeIndex(corpus: DataFrame, s: Similarity.Serving,
+                                idxTable: String, vecsTable: String): Unit = {
+    val v = Similarity.vectors(corpus)
+    Bucketing.writeBucketed(Similarity.indexSide(v, s),
+      idxTable, IndexBuckets, "bucket")
+    if (s.spec.pq)
+      Bucketing.writeBucketed(
+        v.select(col("vec_id").as("corpus_id"), col("e").as("ec"), col("nrm").as("nc")),
+        vecsTable, IndexBuckets, "corpus_id")
+  }
+
+  /** Candidates of a [[Similarity.vectors]] frame of queries against the
+    * probe index: exact-scored (query_id, corpus_id, cos) for full
+    * vectors, PQ-scored (query_id, eq, nq, corpus_id, acos) otherwise.
+    */
+  private[graft] def probeIndex(queries: DataFrame, s: Similarity.Serving,
+                                index: DataFrame): DataFrame = {
+    val cand = Similarity.probeSide(queries, s).join(index, "bucket")
+    if (s.spec.pq)
+      cand.select(col("query_id"), col("eq"), col("nq"), col("corpus_id"), s.approx.as("acos"))
+    else cand.select(col("query_id"), col("corpus_id"), s.exact.as("cos"))
+  }
+
+  /** Top-k of a bounded candidate set (a micro-batch, or the Cli's query
+    * vectors): one window per query. A PQ spec shortlists k·refine by
+    * the approximate score, then exact-scores ONLY the shortlist against
+    * the rerank table. The candidate frame is read once: a micro-batch
+    * is not cached, so a second read (e.g. to distill the query vectors)
+    * would re-run the whole probe join. The single-window ranking equals
+    * the batch plan's two-phase rerank — same total order.
+    */
+  private[graft] def serveBounded(cand: DataFrame, s: Similarity.Serving, k: Int,
+                                  vecs: => DataFrame): DataFrame = s.named(
+    if (!s.spec.pq) Similarity.rerankTopK(cand, k)
+    else {
+      val wa = Window.partitionBy(col("query_id")).orderBy(col("acos").desc, col("corpus_id"))
+      val short = cand.withColumn("srnk", row_number().over(wa))
+        .filter(col("srnk") <= k * s.refine)
+      Similarity.rerankTopK(short.join(vecs, "corpus_id")
+        .select(col("query_id"), col("corpus_id"), s.exact.as("cos")), k)
+    })
+
   /** Streams `embPath` as incoming queries (vec_id < 8, the same query
-    * set as the batch op) against the corpus at the same path — replay
-    * equals [[Similarity.ivfTopKSized]] exactly, gate-checked with its
-    * oracle (late r15: both faces ride the nlist+probes ladder through
-    * the SHARED ivfServingExprs kernels — identity at every gated
-    * scale, √N books with a pinned probed fraction beyond).
+    * set as the batch op) against the corpus at the same path. Replay
+    * equals [[Similarity.ivfTopK]] over the same spec exactly (the
+    * registered stream rows share their batch twins' oracles): the
+    * index kernels come from the same [[Similarity.servingKernels]], and
+    * the fits are deterministic, so stream and batch books are
+    * bit-identical. `tablePrefix` namespaces the per-run index tables
+    * so concurrent serving streams in one session can't clobber each
+    * other (round-6 ADVICE).
     */
   def ivfTopKStream(spark: SparkSession, embPath: String,
-                    outDir: String, checkpointDir: String, k: Int = 10,
+                    outDir: String, checkpointDir: String,
+                    spec: IvfSpec = IvfSpec(), k: Int = 10,
                     maxFilesPerTrigger: Option[Int] = None,
-                    probes: Int = 8,
                     tablePrefix: String = "graft_ivf_stream"): DataFrame = {
     TopicStream.deleteRecursively(Paths.get(outDir))
     Files.createDirectories(Paths.get(outDir))
     val corpus = spark.read.parquet(embPath)
     val isQuery = col("vec_id") < 8
     // the batch face's sizing count is the WHOLE table — same here, so
-    // stream and batch derive the identical ladder step
-    val n = corpus.count()
-    val (bucketCol, probesCol) = Similarity.ivfServingExprs(
-      corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
-
-    // probed by every micro-batch — materialize the corpus index ONCE,
-    // bucketed by the probe join key; bucket assignment is the same
-    // kernel pair as the batch ivfTopKSized, so stream and batch land
-    // vectors in identical buckets
-    // tablePrefix namespaces the per-run index so concurrent serving
-    // streams in one session can't clobber each other (round-6 ADVICE)
-    val idxTable = s"${tablePrefix}_idx"
-    Bucketing.writeBucketed(
-      Similarity.vectors(corpus.filter(!isQuery))
-        .withColumn("bucket", bucketCol)
-        .select(col("vec_id").as("corpus_id"), col("e").as("ec"),
-          col("nrm").as("nc"), col("bucket")),
-      idxTable, IndexBuckets, "bucket")
-    val corpusIndex = spark.table(idxTable)
+    // stream and batch derive the identical ladder steps
+    val s = Similarity.servingKernels(corpus, isQuery, spec, corpus.count())
+    val (idxTable, vecsTable) = (s"${tablePrefix}_idx", s"${tablePrefix}_vecs")
+    writeIndex(corpus.filter(!isQuery), s, idxTable, vecsTable)
     val incoming = TopicStream.fileStream(spark, embPath, maxFilesPerTrigger).filter(isQuery)
-
-    val probed = Similarity.vectors(incoming)
-      .withColumn("bucket", explode(probesCol))
-      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("nrm").as("nq"), col("bucket"))
-
-    val scored = probed.join(corpusIndex, "bucket")
-      .withColumn("cos",
-        expr("graft_dot(eq, ec)") / (col("nq") * col("nc")))
-      .select(col("query_id"), col("corpus_id"), col("cos"))
-
-    val q = scored.writeStream
+    val q = probeIndex(Similarity.vectors(incoming), s, spark.table(idxTable)).writeStream
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a query's candidates all land in its arrival batch → batch-local
-        // dedup + rerank is the complete per-query top-k
-        val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("corpus_id"))
+        // a query's candidates all land in its arrival batch → the
+        // batch-local rerank is the complete per-query top-k
         TopicStream.writeBatchIdempotent(
-          batch.dropDuplicates("query_id", "corpus_id")
-            .withColumn("rnk", row_number().over(w))
-            .filter(col("rnk") <= k),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
-  }
-
-  /** Streaming ANN serving over the COMPACT IVF-PQ index — the online
-    * face of [[Similarity.ivfPqTopK]]. The resident index per corpus
-    * vector is (bucket, 8 PQ codes) ≈ 12 bytes; incoming query batches
-    * probe buckets and score candidates from the codes alone, and only
-    * each batch's k·refine shortlist touches the full vector table for
-    * the exact rerank. Both static sides are materialized bucketed by
-    * their join key — the code index by `bucket` (the per-trigger probe
-    * join), the full-vector table by `corpus_id` (the per-batch
-    * shortlist rerank join) — so neither is ever shuffled after the
-    * one-time write. At scale the fat vectors live exactly like this:
-    * a corpus_id-bucketed store fetched per-shortlist. Replay equals
-    * batch ivfPqTopK exactly (gate-checked with its oracle).
-    */
-  def ivfPqTopKStream(spark: SparkSession, embPath: String,
-                      outDir: String, checkpointDir: String, k: Int = 10,
-                      maxFilesPerTrigger: Option[Int] = None,
-                      probes: Int = 8, refine: Int = 0,
-                      tablePrefix: String = "graft_pq_stream",
-                      book: String = "formula",
-                      refineMul: Int = 1): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
-    val corpus = spark.read.parquet(embPath)
-    // refine <= 0 derives the N-adaptive shortlist width (r14) — the
-    // batch Sized row's ladder, so replay == batch at every scale;
-    // late r15 the coarse books + probes ride the same ladder through
-    // the SHARED pqServingExprs quartet (batch and stream encode and
-    // score with the identical kernel constructions). `book` (r16)
-    // picks the codebook pair through the SHARED builders — "resfit"
-    // (formula ladder coarse + fitted residual book,
-    // pqResFitServingExprs) or "fitted" (laddered coarse k-means +
-    // residual fit against it, pqFittedServingExprs); both fits are
-    // deterministic (integer arithmetic over the first-2048 sample),
-    // so this face's books are bit-identical to the batch operator's.
-    val n = corpus.count()
-    // refineMul (r17b): the shortlist-boost dial the hq/m16 serving
-    // points ride — multiplies the N-adaptive width, exactly as the
-    // batch rows multiply sizedRefine
-    val refineEff = (if (refine > 0) refine else Similarity.sizedRefine(n)) *
-      refineMul
-    val (bucketCol, probesCol, codeCol, scoreCol) = book match {
-      case "resfit" => Similarity.pqResFitServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
-      case "fitted" => Similarity.pqFittedServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
-      // the r17b winning composition: 16×64 residual book (41000..
-      // seeds) fitted on the 8192-row sample — the SHARED builder
-      // guarantees bit-identity with sim_topk_ivf_pq_fitted_m16's books
-      case "m16" => Similarity.pqFittedServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n),
-        pqK = 64, pqSeedRowBase = 41000, pqM = 16, pqFitSample = 8192)
-      case "formula" => Similarity.pqServingExprs(
-        corpus, Similarity.sizedProbes(probes, n), Similarity.sizedNlist(n))
-      case other => throw new IllegalArgumentException(
-        s"ivfPqTopKStream: unknown book '$other' (formula | resfit | fitted | m16)")
-    }
-    val isQuery = col("vec_id") < 8
-
-    val vecsTable = s"${tablePrefix}_vecs"
-    Bucketing.writeBucketed(
-      Similarity.vectors(corpus.filter(!isQuery))
-        .select(col("vec_id").as("corpus_id"), col("e").as("ec"), col("nrm").as("nc")),
-      vecsTable, IndexBuckets, "corpus_id")
-    val idxTable = s"${tablePrefix}_idx"
-    Bucketing.writeBucketed(
-      Similarity.vectors(corpus.filter(!isQuery))
-        .select(col("vec_id").as("corpus_id"),
-          bucketCol.as("bucket"),
-          codeCol.as("codes")),
-      idxTable, IndexBuckets, "bucket")
-    val corpusVecs = spark.table(vecsTable)
-    val pqIndex = spark.table(idxTable)
-
-    val incoming = TopicStream.fileStream(spark, embPath, maxFilesPerTrigger).filter(isQuery)
-    val probed = Similarity.vectors(incoming)
-      .withColumn("bucket", explode(probesCol))
-      .select(col("vec_id").as("query_id"), col("e").as("eq"),
-        col("nrm").as("nq"), col("bucket"))
-    val approx = probed.join(pqIndex, "bucket")
-      .select(col("query_id"), col("eq"), col("nq"), col("corpus_id"),
-        scoreCol.as("acos"))
-
-    val q = approx.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a query's candidates all arrive in its batch: shortlist the
-        // top k·refine by PQ score, then exact-rerank ONLY those
-        // against the full vectors — batch-local, complete per query
-        val wa = Window.partitionBy(col("query_id"))
-          .orderBy(col("acos").desc, col("corpus_id"))
-        val short = batch
-          .withColumn("srnk", row_number().over(wa))
-          .filter(col("srnk") <= k * refineEff)
-          .drop("srnk", "acos")
-        val wr = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("corpus_id"))
-        TopicStream.writeBatchIdempotent(
-          short.join(corpusVecs, "corpus_id")
-            .withColumn("cos", expr("graft_dot(eq, ec)") / (col("nq") * col("nc")))
-            .withColumn("rnk", row_number().over(wr))
-            .filter(col("rnk") <= k)
-            .select(col("query_id"), col("corpus_id"), col("cos"), col("rnk")),
-          batchId, outDir)
-        ()
-      }
-      .start()
-    TopicStream.awaitAndCapturePlan(q)
-    TopicStream.readBatchedOutput(spark, outDir)
-  }
-
-  /** Streaming PQ-compact MIPS serving (r14) — the online face of
-    * [[Similarity.mipsIvfPqTopK]], completing the augmented-space
-    * serving story: the corpus' codes-resident index (coarse bucket +
-    * 5 augmented-space PQ codes per vector) and the original-vector
-    * rerank table are materialized ONCE, bucketed by their probe keys;
-    * arriving queries grow the literal 0 augmentation, probe their
-    * buckets statelessly, shortlist by the approximate augmented
-    * cosine inside their batch (a query's candidates never span
-    * batches), and exact-rerank ONLY the shortlist by RAW inner
-    * product. Replay reproduces `sim_topk_mips_ivf_pq` exactly — the
-    * oracle is shared verbatim. Kernels come from
-    * [[Similarity.registerMipsServing]], so batch and stream can
-    * never drift on codebooks.
-    */
-  def mipsIvfPqTopKStream(spark: SparkSession, embPath: String,
-                          outDir: String, checkpointDir: String, k: Int = 10,
-                          maxFilesPerTrigger: Option[Int] = None,
-                          probes: Int = 8, refine: Int = 0,
-                          tablePrefix: String = "graft_mips_pq_stream"): DataFrame = {
-    TopicStream.deleteRecursively(Paths.get(outDir))
-    Files.createDirectories(Paths.get(outDir))
-    val corpus = spark.read.parquet(embPath)
-    // refine <= 0 derives the N-adaptive shortlist width (r14)
-    val refineEff =
-      if (refine > 0) refine else Similarity.sizedRefine(corpus.count())
-    val isQuery = col("vec_id") < 8
-    Similarity.registerMipsServing(corpus, probes)
-
-    // M = the corpus max norm (one-row driver maximum, the batch op's
-    // sanctioned collect) — fixed at index-build time, exactly the
-    // deployment contract (a served index is built against ITS corpus)
-    val m = Similarity.vectors(corpus.filter(!isQuery))
-      .agg(max(col("nrm"))).head().getDouble(0)
-    val aug = concat(col("e"),
-      array(sqrt(lit(m) * lit(m) - col("nrm") * col("nrm"))))
-
-    val vecsTable = s"${tablePrefix}_vecs"
-    Bucketing.writeBucketed(
-      Similarity.vectors(corpus.filter(!isQuery))
-        .select(col("vec_id").as("corpus_id"), col("e").as("ec")),
-      vecsTable, IndexBuckets, "corpus_id")
-    val idxTable = s"${tablePrefix}_idx"
-    Bucketing.writeBucketed(
-      Similarity.vectors(corpus.filter(!isQuery))
-        .withColumn("ea", aug)
-        .select(col("vec_id").as("corpus_id"),
-          call_function("graft_mips_bucket", col("ea")).as("bucket"),
-          call_function("graft_mips_pq_code", col("ea")).as("codes")),
-      idxTable, IndexBuckets, "bucket")
-    val corpusVecs = spark.table(vecsTable)
-    val pqIndex = spark.table(idxTable)
-
-    val incoming = TopicStream.fileStream(spark, embPath, maxFilesPerTrigger).filter(isQuery)
-    val probed = Similarity.vectors(incoming)
-      .withColumn("eqa", concat(col("e"), array(lit(0.0))))
-      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("eqa"),
-        explode(call_function(s"graft_mips_probes_$probes", col("eqa"))).as("bucket"))
-    // candidate rows stay NARROW (query_id, eq-free, corpus_id, acos):
-    // carrying the 64-double query vector on every candidate-keyed row
-    // through the pre-shortlist window exchange is the fat-payload
-    // anti-pattern the batch twin avoids — eq is re-joined onto the
-    // k·refine shortlist only, inside foreachBatch (r14 ADVICE). The
-    // raw query vector still rides each row into the probe join (it
-    // arrived with the query), but is dropped before anything
-    // candidate-sized shuffles.
-    val approx = probed.join(pqIndex, "bucket")
-      .select(col("query_id"), col("eq"), col("corpus_id"),
-        call_function("graft_mips_pq_score",
-          col("eqa"), col("bucket"), col("codes")).as("acos"))
-
-    val q = approx.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a query's candidates all arrive in its batch: PQ shortlist,
-        // then the exact RAW-ip rerank of only the shortlist. The
-        // per-batch query-vector table is distilled FIRST (map-side
-        // partial first() — the exchange carries one row per query per
-        // map partition, never the candidate set) so the shortlist
-        // window shuffles eq-free rows; eq re-joins post-shortlist as
-        // a broadcast, the batch twin's plan shape.
-        val queryVecs = batch.select(col("query_id"), col("eq"))
-          .dropDuplicates("query_id")
-        val wa = Window.partitionBy(col("query_id"))
-          .orderBy(col("acos").desc, col("corpus_id"))
-        val short = batch.drop("eq")
-          .withColumn("srnk", row_number().over(wa))
-          .filter(col("srnk") <= k * refineEff)
-          .drop("srnk", "acos")
-        val wr = Window.partitionBy(col("query_id"))
-          .orderBy(col("ip").desc, col("corpus_id"))
-        TopicStream.writeBatchIdempotent(
-          short.join(corpusVecs, "corpus_id")
-            .join(broadcast(queryVecs), "query_id")
-            .withColumn("ip", expr("graft_dot(eq, ec)"))
-            .withColumn("rnk", row_number().over(wr))
-            .filter(col("rnk") <= k)
-            .select(col("query_id"), col("corpus_id"), col("ip"), col("rnk")),
-          batchId, outDir)
+          serveBounded(batch, s, k, spark.table(vecsTable)), batchId, outDir)
         ()
       }
       .start()

@@ -4,7 +4,7 @@ import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TopicOps
+import graft.operators.{IvfSpec, TopicOps}
 import graft.sources.Topics
 
 /** The command surface (reference CLI.kt / commands dir): arg parsing,
@@ -304,9 +304,9 @@ class CliSpec extends SparkSpec {
       print = lines += _)
     assert(code == 0)
     val got = spark.read.parquet(s"$out/topk")
-    val lib = graft.operators.Similarity.ivfPqTopKSized(
+    val lib = graft.operators.Similarity.ivfTopK(
       graft.sources.Tables.load(spark, sf, "embeddings"),
-      col("vec_id") < 8, k = 10)
+      col("vec_id") < 8, IvfSpec(codes = IvfSpec.PqFormula))
       .select(got.columns.map(col): _*)
     assert(got.count() == lib.count())
     assert(got.exceptAll(lib).isEmpty && lib.exceptAll(got).isEmpty,
@@ -333,12 +333,12 @@ class CliSpec extends SparkSpec {
       print = lines += _)
     assert(code == 0)
     val got = spark.read.parquet(s"$out/topk")
-    val lib = graft.operators.Similarity.ivfPqTopKFittedSized(
+    val lib = graft.operators.Similarity.ivfTopK(
       graft.sources.Tables.load(spark, sf, "embeddings"),
-      col("vec_id") < 8, k = 10)
+      col("vec_id") < 8, IvfSpec.FittedPq)
       .select(got.columns.map(col): _*)
     assert(got.exceptAll(lib).isEmpty && lib.exceptAll(got).isEmpty,
-      "-f answers must equal ivfPqTopKFittedSized bit-for-bit")
+      "-f answers must equal the fitted_sized operator bit-for-bit")
     assert(lines.exists(_.contains("fitted books")))
     // -f -r high == the registered fitted_hr row's operator
     val code2 = Cli.run(spark,
@@ -347,10 +347,10 @@ class CliSpec extends SparkSpec {
       print = lines += _)
     assert(code2 == 0)
     val gotH = spark.read.parquet(s"$out/topk")
-    val libH = graft.operators.Similarity.ivfPqTopKFittedSized(
+    val libH = graft.operators.Similarity.ivfTopK(
       graft.sources.Tables.load(spark, sf, "embeddings"),
-      col("vec_id") < 8, k = 10,
-      probes = graft.operators.Similarity.probesForRecall("high"))
+      col("vec_id") < 8, IvfSpec.FittedPq.copy(
+        probes = graft.operators.Similarity.probesForRecall("high")))
       .select(gotH.columns.map(col): _*)
     assert(gotH.exceptAll(libH).isEmpty && libH.exceptAll(gotH).isEmpty,
       "-f -r high answers must equal the fitted_hr operator bit-for-bit")
@@ -368,11 +368,9 @@ class CliSpec extends SparkSpec {
       print = lines += _)
     assert(code == 0)
     val got = spark.read.parquet(s"$out/topk")
-    val lib = graft.operators.Similarity.ivfPqTopKFittedSizedShaped(
+    val lib = graft.operators.Similarity.ivfTopK(
       graft.sources.Tables.load(spark, sf, "embeddings"),
-      col("vec_id") < 8, k = 10,
-      pqM = 16, pqK = 64, pqFitSample = 8192, pqSeedRowBase = 41000,
-      refineMul = 4)
+      col("vec_id") < 8, IvfSpec.M16)
       .select(got.columns.map(col): _*)
     assert(got.exceptAll(lib).isEmpty && lib.exceptAll(got).isEmpty,
       "-q answers must equal the m16 operator bit-for-bit")

@@ -34,7 +34,9 @@ class DeterminismSpec extends SparkSpec {
     assertInvariant("pipeline_decontaminate_span",
       TextOps.decontaminateSpans(_, col("doc_id") % 97 === 0), docs)
     assertInvariant("sim_topk_ivf_pq",
-      Similarity.ivfPqTopK(_, col("vec_id") < 8), emb)
+      Similarity.ivfTopK(_, col("vec_id") < 8,
+        graft.operators.IvfSpec(laddered = false, codes = graft.operators.IvfSpec.PqFormula,
+          refine = graft.operators.IvfSpec.Fixed(4))), emb)
   }
 
   test("round-8 operators are partitioning-invariant: star components, pack " +

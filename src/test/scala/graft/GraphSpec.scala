@@ -125,7 +125,8 @@ class GraphSpec extends SparkSpec {
     Graph.writeKnnEdgeIndex(emb, "graft_knn_fitted_spec", k = 5, probes = 2,
       fittedBook = true)
     val indexed = Graph.pageRankFromIndex(spark, "graft_knn_fitted_spec")
-    val pairs = graft.operators.Similarity.knnJoinIvfFittedSized(emb, k = 5, probes = 2)
+    val pairs = graft.operators.Similarity.knnJoinIvf(emb,
+      graft.operators.IvfSpec(fitted = true, probes = 2), k = 5)
       .select(least(col("query_id"), col("corpus_id")).as("pa"),
         greatest(col("query_id"), col("corpus_id")).as("pb"))
       .distinct()

@@ -217,6 +217,26 @@ class NativeHashSpec extends SparkSpec {
     }
   }
 
+  test("ivf probes emit each bucket once: tied cosines and a zero-norm vector " +
+      "collapse to the first tied position, so the list can be shorter than probes") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import graft.functions.VectorNativeImpl
+    def probes(e: Array[Double], n: Int, cents: Array[Array[Double]]): Seq[Int] =
+      VectorNativeImpl.ivfProbes(UnsafeArrayData.fromPrimitiveArray(e), n, cents,
+        cents.map(c => math.sqrt(c.map(x => x * x).sum))).toIntArray().toSeq
+    // centroids 1 and 3 point the same way, so their cosines tie exactly
+    val cents = Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(2.0, 0.0), Array(-1.0, 0.0))
+    assert(probes(Array(1.0, 0.5), 4, cents) === Seq(1, 2, 4))
+    assert(probes(Array(1.0, 0.5), 2, cents) === Seq(1))
+    // a zero vector's cosines are all NaN: one probe, bucket 1
+    assert(probes(Array(0.0, 0.0), 3, cents) === Seq(1))
+    NativeHash.register(spark)
+    val zero = spark.sql(
+      "SELECT graft_ivf_probes(array_repeat(CAST(0.0 AS DOUBLE), 64), 8) AS p")
+      .head().getSeq[Int](0)
+    assert(zero === Seq(1))
+  }
+
   test("intersect-size and dot kernels match their HOF formulations") {
     val pairs = spark.sql(
       """SELECT array(1L,2L,3L,4L) AS a, array(3L,4L,5L) AS b,

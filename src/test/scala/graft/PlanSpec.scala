@@ -199,8 +199,9 @@ class PlanSpec extends SparkSpec {
   test("MIPS-IVF broadcasts the probed query side and buckets through the " +
       "augmented kernel (no crossJoin of the corpus)") {
     val p = graft.operators.Similarity
-      .mipsIvfTopK(graft.sources.Tables.load(spark, sf, "embeddings"),
-        org.apache.spark.sql.functions.col("vec_id") < 8)
+      .ivfTopK(graft.sources.Tables.load(spark, sf, "embeddings"),
+        org.apache.spark.sql.functions.col("vec_id") < 8,
+        graft.operators.IvfSpec(mips = true))
       .queryExecution.executedPlan.toString
     assert(p.contains("Broadcast"), s"probed queries must broadcast:\n$p")
     // the registry alias resolves to the IvfBucket/IvfProbes kernels —
@@ -595,5 +596,29 @@ class PlanSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("__salt"), s"join must key on the salt:\n$plan")
     assert(plan.contains("__band"), s"join must keep the band key:\n$plan")
+  }
+
+  test("IVF serving and kNN plans carry no (query_id, corpus_id) dedup " +
+      "aggregate and no lag window; Exchange counts pinned") {
+    // candidates are unique by construction (one bucket per corpus
+    // vector, each probed bucket emitted once by graft_ivf_probes), so
+    // the only candidate-sized exchange left is the two-phase rerank's.
+    // Exchanges (all kinds, incl. the query-side BroadcastExchange and
+    // the registry's final orderBy): sim_topk_ivf 7 -> 4 (the candidate
+    // distinct plus the score-after-join's shuffle and full-vector
+    // broadcast are gone: full vectors now score at generation, as the
+    // MIPS and kNN rows already did); both MIPS rows 5 -> 4 (their
+    // distinct); sim_knn_join_ivf 4 -> 4 (the in-window lag dedup is
+    // gone, its exchange was shared).
+    val pairAgg = "Aggregate\\(keys=\\[query_id#\\d+L?, corpus_id#\\d+L?[,\\]]".r
+    val expected = Map("sim_topk_ivf" -> 4, "sim_topk_mips_ivf" -> 4,
+      "sim_topk_mips_ivf_fitted" -> 4, "sim_knn_join_ivf" -> 4)
+    for ((name, exchanges) <- expected) {
+      val p = graft.queries.PipelineQueries.queries(name)(spark, sf)
+        .queryExecution.executedPlan.toString
+      assert(pairAgg.findFirstIn(p).isEmpty, s"$name plans a candidate dedup aggregate:\n$p")
+      assert(!p.contains("lag("), s"$name plans a lag dedup window:\n$p")
+      assert("Exchange".r.findAllIn(p).length === exchanges, s"$name Exchange count:\n$p")
+    }
   }
 }

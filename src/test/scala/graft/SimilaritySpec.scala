@@ -2,17 +2,25 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{IvfSpec, Similarity}
+import graft.operators.IvfSpec.{Fixed, PqFitted, PqFormula}
 import graft.sources.Tables
 
 class SimilaritySpec extends SparkSpec {
 
   private def emb = Tables.load(spark, sf, "embeddings")
   private val isQuery = col("vec_id") < 8
+  // the fixed-64-book serving points (the ladders' identity rung)
+  private val fixedIvf = IvfSpec(laddered = false)
+  private val fixedPq = IvfSpec(laddered = false, codes = PqFormula, refine = Fixed(4))
+  private val fixedMipsPq = fixedPq.copy(mips = true)
+  private val fittedPq = IvfSpec(fitted = true, laddered = false, codes = PqFitted(),
+    refine = Fixed(4))
+  private def topK(spec: IvfSpec) = Similarity.ivfTopK(emb, isQuery, spec)
 
   test("knn self-join: no self pairs, per-query ranks sequential from 1 and capped at k, " +
       "every neighbor lives in one of the query's probed buckets") {
-    val g = Similarity.knnJoinIvf(emb).cache()
+    val g = Similarity.knnJoinIvf(emb, IvfSpec(laddered = false, probes = 2)).cache()
     assert(g.count() > 0)
     assert(g.filter(col("query_id") === col("corpus_id")).count() === 0)
     val ranks = g.groupBy("query_id")
@@ -104,7 +112,7 @@ class SimilaritySpec extends SparkSpec {
       "exact MIPS baseline on shared pairs) and recall vs exact MIPS is " +
       "nontrivial and reported — the norm-augmentation reduction works") {
     val mips = Similarity.mipsTopK(emb, isQuery, k = 10).cache()
-    val ivf = Similarity.mipsIvfTopK(emb, isQuery, k = 10).cache()
+    val ivf = topK(IvfSpec(mips = true)).cache()
     assert(ivf.filter(col("query_id") === col("corpus_id")).count() === 0)
     // every per-query rank list is sequential from 1 (≤ k rows — probed
     // buckets can under-fill a query at toy scale)
@@ -142,7 +150,8 @@ class SimilaritySpec extends SparkSpec {
     // a big-codebook index at toy scale: same exact-ip arithmetic, only
     // recall moves (finer buckets admit fewer candidates per probe)
     val mips = Similarity.mipsTopK(emb, isQuery, k = 10).cache()
-    val big = Similarity.mipsIvfTopKNlist(emb, isQuery, k = 10, nlist = 128).cache()
+    // n = 5000 forces the 128 rung (sizedProbes keeps 8 there)
+    val big = Similarity.ivfTopKAt(emb, isQuery, IvfSpec(mips = true), 10, 5000L).cache()
     val shared = big.join(
       mips.select(col("query_id"), col("corpus_id"), col("ip").as("ip_exact")),
       Seq("query_id", "corpus_id"))
@@ -161,13 +170,15 @@ class SimilaritySpec extends SparkSpec {
       "MIPS is measured against the formula book") {
     import graft.functions.Codebooks
     // the fit is the integer recurrence — bit-identical across runs
-    val fit1 = Similarity.fitMipsCentroids(emb, isQuery)
-    val fit2 = Similarity.fitMipsCentroids(emb, isQuery)
+    val maxNorm = Similarity.vectors(emb).filter(!isQuery).agg(max(col("nrm")))
+      .head().getDouble(0)
+    val fit1 = Similarity.fitMipsCentroids(emb, isQuery, Codebooks.NCentroids, maxNorm, 1L)
+    val fit2 = Similarity.fitMipsCentroids(emb, isQuery, Codebooks.NCentroids, maxNorm, 1L)
     assert(fit1.map(_.toSeq).toSeq === fit2.map(_.toSeq).toSeq)
     assert(fit1.length === Codebooks.NCentroids &&
       fit1.forall(_.length === Codebooks.Dim + 1))
     val mips = Similarity.mipsTopK(emb, isQuery, k = 10).cache()
-    val fitted = Similarity.mipsIvfTopKFitted(emb, isQuery, k = 10).cache()
+    val fitted = topK(IvfSpec(mips = true, fitted = true, laddered = false)).cache()
     // every fitted hit carries the exact raw dot (the rerank arithmetic
     // is the exact baseline's)
     val shared = fitted.join(
@@ -177,7 +188,7 @@ class SimilaritySpec extends SparkSpec {
     val n = mips.count().toDouble
     val rFit = fitted.select("query_id", "corpus_id")
       .intersect(mips.select("query_id", "corpus_id")).count() / n
-    val formula = Similarity.mipsIvfTopK(emb, isQuery, k = 10)
+    val formula = topK(IvfSpec(mips = true))
     val rFormula = formula.select("query_id", "corpus_id")
       .intersect(mips.select("query_id", "corpus_id")).count() / n
     info(f"fitted MIPS-IVF recall@10 vs exact: $rFit%.3f (formula book: $rFormula%.3f)")
@@ -220,7 +231,7 @@ class SimilaritySpec extends SparkSpec {
       "shortlist rerank respects k, and recall vs exact MIPS is nontrivial " +
       "— the codes-resident serving form of the reduction works") {
     val mips = Similarity.mipsTopK(emb, isQuery, k = 10).cache()
-    val pq = Similarity.mipsIvfPqTopK(emb, isQuery, k = 10).cache()
+    val pq = topK(fixedMipsPq).cache()
     assert(pq.filter(col("query_id") === col("corpus_id")).count() === 0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("rnk"))
@@ -254,12 +265,12 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.sizedRefine(1000000) === 16)
     assert(Similarity.sizedRefine(10000000) === 32)
     // at test scale the Sized rows are bit-identical to the fixed-4 form
-    val fixedPq = Similarity.ivfPqTopK(emb, isQuery, k = 10, refine = 4)
-    val sizedPq = Similarity.ivfPqTopKSized(emb, isQuery, k = 10)
-    assert(sizedPq.exceptAll(fixedPq).count() === 0 &&
-      fixedPq.exceptAll(sizedPq).count() === 0)
-    val fixedMips = Similarity.mipsIvfPqTopK(emb, isQuery, k = 10, refine = 4)
-    val sizedMips = Similarity.mipsIvfPqTopKSized(emb, isQuery, k = 10)
+    val fixed4 = topK(fixedPq)
+    val sizedPq = topK(IvfSpec(codes = PqFormula))
+    assert(sizedPq.exceptAll(fixed4).count() === 0 &&
+      fixed4.exceptAll(sizedPq).count() === 0)
+    val fixedMips = topK(fixedMipsPq)
+    val sizedMips = topK(IvfSpec.MipsPq)
     assert(sizedMips.exceptAll(fixedMips).count() === 0 &&
       fixedMips.exceptAll(sizedMips).count() === 0)
   }
@@ -288,7 +299,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF top-k hits score identically to brute force; recall reported") {
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val ivf = Similarity.ivfTopK(emb, isQuery, k = 10)
+    val ivf = topK(fixedIvf)
       .select(col("query_id"), col("corpus_id"), col("cos")).cache()
     assert(ivf.except(bf).count() === 0)
     val bf10 = Similarity.bruteForceTopK(emb, isQuery, k = 10)
@@ -304,15 +315,15 @@ class SimilaritySpec extends SparkSpec {
       "cosines, and its hits stay inside brute force") {
     // identity at every gate scale: the sized path IS ivfTopK bit-for-bit
     assert(Similarity.sizedNlist(emb.count()) === graft.functions.Codebooks.NCentroids)
-    val sized = Similarity.ivfTopKSized(emb, isQuery, k = 10)
-    val fixed = Similarity.ivfTopK(emb, isQuery, k = 10)
+    val sized = topK(IvfSpec())
+    val fixed = topK(fixedIvf)
     assert(sized.exceptAll(fixed).isEmpty && fixed.exceptAll(sized).isEmpty,
       "sized serving must equal the fixed-book plan below the ladder step")
     // a big-codebook index at toy scale: same exact-cosine arithmetic,
     // only recall moves (finer buckets admit fewer candidates per probe)
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val big = Similarity.ivfTopK(emb, isQuery, k = 10, nlist = 128)
+    val big = Similarity.ivfTopKAt(emb, isQuery, IvfSpec(), 10, 5000L)
       .select(col("query_id"), col("corpus_id"), col("cos")).cache()
     assert(big.except(bf).count() === 0,
       "big-codebook IVF hits must score the exact cosine")
@@ -328,9 +339,8 @@ class SimilaritySpec extends SparkSpec {
   test("cosine IVF-PQ nlist ladder: the sized serving path is the fixed-book " +
       "plan at gate scales, and a forced 128-book compact index still " +
       "reranks its shortlist to exact cosines inside brute force") {
-    val sized = Similarity.ivfPqTopKSized(emb, isQuery, k = 10)
-    val fixed = Similarity.ivfPqTopK(emb, isQuery, k = 10,
-      refine = Similarity.sizedRefine(emb.count()))
+    val sized = topK(IvfSpec(codes = PqFormula))
+    val fixed = topK(fixedPq.copy(refine = Fixed(Similarity.sizedRefine(emb.count()))))
     assert(sized.exceptAll(fixed).isEmpty && fixed.exceptAll(sized).isEmpty,
       "sized PQ serving must equal the fixed-book plan below the ladder step")
     // the big coarse book swaps ONLY the coarse references; the shared
@@ -338,8 +348,8 @@ class SimilaritySpec extends SparkSpec {
     // final rerank is still the exact cosine
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val big = Similarity.ivfPqTopKNlist(emb, isQuery, k = 10, nlist = 128,
-      refine = 4)
+    val big = Similarity.ivfTopKAt(emb, isQuery,
+      IvfSpec(codes = PqFormula, refine = Fixed(4)), 10, 5000L)
       .select(col("query_id"), col("corpus_id"), col("cos")).cache()
     assert(big.except(bf).count() === 0,
       "big-codebook PQ hits must rerank to the exact cosine")
@@ -354,9 +364,9 @@ class SimilaritySpec extends SparkSpec {
     val n = bf10.count().toDouble
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "corpus_id").intersect(bf10).count() / n
-    val lcg8 = recallOf(Similarity.ivfTopK(emb, isQuery, k = 10, probes = 8))
-    val km8 = recallOf(Similarity.ivfTopKFitted(emb, isQuery, k = 10, probes = 8))
-    val km48 = recallOf(Similarity.ivfTopKFitted(emb, isQuery, k = 10, probes = 48))
+    val lcg8 = recallOf(topK(fixedIvf))
+    val km8 = recallOf(topK(fixedIvf.copy(fitted = true)))
+    val km48 = recallOf(topK(fixedIvf.copy(fitted = true, probes = 48)))
     info(f"recall@10: lcg/8probe=$lcg8%.3f kmeans/8probe=$km8%.3f kmeans/48probe=$km48%.3f")
     // the corpus is isotropic (no cluster structure), so recall at the
     // default 8/64 probes is moderate by design (measured: lcg 0.30,
@@ -369,25 +379,25 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("deterministic fit sample: modulus path == explicit-subset path; identity at gate scale") {
-    import Similarity.{fitCentroidsWithModulus, sizedKmFitModulus, KmFitCap}
+    import Similarity.{fitCentroids, sizedKmFitModulus, KmFitCap}
     // the ladder is identity through sf1 (n <= KmFitCap)
     assert(sizedKmFitModulus(500L) === 1L)
     assert(sizedKmFitModulus(KmFitCap) === 1L)
     assert(sizedKmFitModulus(200000L) === 4L)
     // m = 1 is bit-identical to the unsampled fit (the gate-scale claim)
-    val full = Similarity.fitCentroids(emb, k = 16, iters = 2)
-    val m1 = fitCentroidsWithModulus(emb, k = 16, iters = 2, m = 1L)
+    val full = fitCentroids(emb, k = 16, iters = 2, m = sizedKmFitModulus(emb.count()))
+    val m1 = fitCentroids(emb, k = 16, iters = 2, m = 1L)
     assert(full.map(_.toSeq).toSeq === m1.map(_.toSeq).toSeq)
     // forcing m = 4 at driver scale must equal fitting the EXPLICITLY
     // pre-filtered subset (the predicate is the only sampling mechanism
     // — mirrors the oracle's kfsizing/vfit CTE pair)
-    val m4 = fitCentroidsWithModulus(emb, k = 16, iters = 2, m = 4L)
+    val m4 = fitCentroids(emb, k = 16, iters = 2, m = 4L)
     val subset = emb.filter(
       (((col("vec_id") % 2147483647L) * 48271L) % 2147483647L) % 4L === 0L)
     val nSub = subset.count()
     info(s"m=4 sample keeps $nSub of ${emb.count()} vectors")
     assert(nSub > 0 && nSub < emb.count())
-    val explicit = fitCentroidsWithModulus(subset, k = 16, iters = 2, m = 1L)
+    val explicit = fitCentroids(subset, k = 16, iters = 2, m = 1L)
     assert(m4.map(_.toSeq).toSeq === explicit.map(_.toSeq).toSeq)
     // a sampled fit still yields a full-shape book (empty clusters keep
     // their seed row — the book never shrinks under sampling)
@@ -429,10 +439,53 @@ class SimilaritySpec extends SparkSpec {
     assert(localA.map(_.toSeq).toSeq === distA.map(_.toSeq).toSeq)
   }
 
+  test("fitLoopLocal fails loudly: a row of the wrong width is rejected, and a " +
+      "worker thread's exception propagates instead of merging partial sums") {
+    import graft.functions.Codebooks
+    import spark.implicits._
+    val dim = Similarity.Dim
+    val ragged = Seq(Seq.fill(dim)(1000.0), Seq.fill(dim - 1)(1000.0)).toDF("xh")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.fitLoopLocal(ragged, Codebooks.fpCentroidsFor(4), dim, 1)
+    }
+    assert(e.getMessage.contains(s"${dim - 1} dims"))
+    // a seed row of the wrong width makes every worker's assignment
+    // throw; swallowed, the fit would return the seeds unchanged
+    val rows = Seq.tabulate(16)(i => Seq.tabulate(dim)(d => ((i * 7 + d) % 5).toDouble)).toDF("xh")
+    val badSeeds = Codebooks.fpCentroidsFor(4).updated(2, Array.fill(dim - 1)(1.0))
+    intercept[IllegalArgumentException] {
+      Similarity.fitLoopLocal(rows, badSeeds, dim, 1)
+    }
+  }
+
+  test("a fitted serving row counts the corpus once: the ladders and both fit " +
+      "samples read the caller's count") {
+    val sc = spark.sparkContext
+    def jobsOf(body: => Any): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerDrain(sc)
+      sc.addSparkListener(listener)
+      try { body; org.apache.spark.ListenerDrain(sc) } finally sc.removeSparkListener(listener)
+      jobs.get()
+    }
+    val e = emb
+    val perCount = jobsOf(e.count())
+    assert(perCount >= 1)
+    // sim_topk_ivf_pq_fitted_sized, built but not run: one corpus count,
+    // the coarse k-means sample collect, the residual-book sample collect
+    val built = jobsOf(Similarity.ivfTopK(e, isQuery, IvfSpec.FittedPq))
+    assert(built === perCount + 2,
+      s"expected one count ($perCount jobs) + 2 fit-sample collects, got $built jobs")
+  }
+
   test("k-means IVF hits score identically to brute force (candidates are exact-ranked)") {
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val km = Similarity.ivfTopKFitted(emb, isQuery, k = 10)
+    val km = topK(fixedIvf.copy(fitted = true))
       .select(col("query_id"), col("corpus_id"), col("cos"))
     assert(km.except(bf).count() === 0)
   }
@@ -440,7 +493,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF-PQ: hits score identically to brute force; refine widens recall toward plain IVF") {
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val pq = Similarity.ivfPqTopK(emb, isQuery, k = 10)
+    val pq = topK(fixedPq)
       .select(col("query_id"), col("corpus_id"), col("cos"))
     // the final rerank is exact over full vectors, so every hit's cosine
     // must appear verbatim in the exhaustive scoring
@@ -451,9 +504,9 @@ class SimilaritySpec extends SparkSpec {
     val n = bf10.count().toDouble
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "corpus_id").intersect(bf10).count() / n
-    val r2 = recallOf(Similarity.ivfPqTopK(emb, isQuery, k = 10, refine = 2))
-    val r8 = recallOf(Similarity.ivfPqTopK(emb, isQuery, k = 10, refine = 8))
-    val ivf = recallOf(Similarity.ivfTopK(emb, isQuery, k = 10))
+    val r2 = recallOf(topK(fixedPq.copy(refine = Fixed(2))))
+    val r8 = recallOf(topK(fixedPq.copy(refine = Fixed(8))))
+    val ivf = recallOf(topK(fixedIvf))
     info(f"recall@10: pq/refine2=$r2%.3f pq/refine8=$r8%.3f ivf(full vectors)=$ivf%.3f")
     // a larger shortlist is a superset ⇒ recall is monotone in refine,
     // and PQ can only LOSE vs exact-ranking every probed candidate
@@ -467,7 +520,7 @@ class SimilaritySpec extends SparkSpec {
       "beat the LCG codebooks at equal settings; rows-gate shape holds") {
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val fitted = Similarity.ivfPqTopKFitted(emb, isQuery, k = 10).cache()
+    val fitted = topK(fittedPq).cache()
     // exact final rerank: every hit's cosine appears in exhaustive scoring
     assert(fitted.select(col("query_id"), col("corpus_id"), col("cos")).except(bf).count() === 0)
     // rows-gate shape: k rows per query, rnk 1..k
@@ -480,9 +533,9 @@ class SimilaritySpec extends SparkSpec {
     val n = bf10.count().toDouble
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "corpus_id").intersect(bf10).count() / n
-    val lcgPq = recallOf(Similarity.ivfPqTopK(emb, isQuery, k = 10))
+    val lcgPq = recallOf(topK(fixedPq))
     val fitPq = recallOf(fitted)
-    val fitPq8 = recallOf(Similarity.ivfPqTopKFitted(emb, isQuery, k = 10, refine = 8))
+    val fitPq8 = recallOf(topK(fittedPq.copy(refine = Fixed(8))))
     info(f"recall@10: pq-lcg=$lcgPq%.3f pq-fitted=$fitPq%.3f pq-fitted/refine8=$fitPq8%.3f")
     // the fitted coarse codebook already dominates LCG on this corpus
     // (kmeans spec above); data-fitted residual codes must preserve that
@@ -497,15 +550,14 @@ class SimilaritySpec extends SparkSpec {
       "sample) exact-reranks and keeps the rows-gate shape") {
     // the shaped surface with every dial at its default IS fitted_sized
     // — one serving implementation, provably shared books
-    val sized = Similarity.ivfPqTopKFittedSized(emb, isQuery, k = 10)
-    val shaped = Similarity.ivfPqTopKFittedSizedShaped(emb, isQuery, k = 10)
+    val sized = topK(IvfSpec.FittedPq)
+    val shaped = topK(IvfSpec(fitted = true, codes = PqFitted(8, 16, 2048),
+      refine = IvfSpec.Sized(1)))
     assert(shaped.exceptAll(sized).isEmpty && sized.exceptAll(shaped).isEmpty,
       "default dials must reproduce fitted_sized bit-for-bit")
     // the registered m16 composition: 16 subspaces x 64 codes, 8192-row
     // fit sample (41000.. seed region), x4 shortlist
-    val m16 = Similarity.ivfPqTopKFittedSizedShaped(emb, isQuery, k = 10,
-      pqM = 16, pqK = 64, pqFitSample = 8192, pqSeedRowBase = 41000,
-      refineMul = 4).cache()
+    val m16 = topK(IvfSpec.M16).cache()
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
     assert(m16.select(col("query_id"), col("corpus_id"), col("cos"))
@@ -513,10 +565,9 @@ class SimilaritySpec extends SparkSpec {
     val perQuery = m16.groupBy("query_id").count()
     assert(perQuery.filter(col("count") =!= 10).count() === 0)
     assert(m16.filter(col("rnk") < 1 || col("rnk") > 10).count() === 0)
-    // a mismatched (pqM, pqK) -> seed-region pairing must fail loudly
+    // a (pqM, pqK) shape with no seed region must fail loudly
     intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKFittedSizedShaped(emb, isQuery, k = 10,
-        pqM = 16, pqK = 64, pqSeedRowBase = 400)
+      topK(IvfSpec(fitted = true, codes = PqFitted(16, 32)))
     }
     m16.unpersist()
   }
@@ -562,28 +613,28 @@ class SimilaritySpec extends SparkSpec {
       "genuinely moves off the formula seeds") {
     // at gate scale the ladders are identities (nlist 64, probes 8,
     // refine 4), so the sized fully-fitted row IS ivfPqTopKFitted
-    val fitted = Similarity.ivfPqTopKFitted(emb, isQuery, k = 10)
-    val sized = Similarity.ivfPqTopKFittedSized(emb, isQuery, k = 10)
+    val fitted = topK(fittedPq)
+    val sized = topK(IvfSpec.FittedPq)
     assert(sized.exceptAll(fitted).isEmpty && fitted.exceptAll(sized).isEmpty,
       "sized fully-fitted serving must equal the fixed form below the ladder step")
     // resfit: the final rerank is exact, so every hit's cosine appears
     // verbatim in exhaustive scoring
     val bf = Similarity.bruteForceTopK(emb, isQuery, k = 1000)
       .select(col("query_id"), col("corpus_id"), col("cos"))
-    val r1 = Similarity.ivfPqTopKResFitted(emb, isQuery, k = 10).cache()
+    val r1 = topK(IvfSpec(codes = PqFitted())).cache()
     assert(r1.select(col("query_id"), col("corpus_id"), col("cos"))
       .except(bf).count() === 0)
     // determinism: an independent second fit+serve is bit-identical —
     // this is what lets batch and the streaming twin each call the
     // shared builder and still share books exactly
-    val r2 = Similarity.ivfPqTopKResFitted(emb, isQuery, k = 10)
+    val r2 = topK(IvfSpec(codes = PqFitted()))
     assert(r1.exceptAll(r2).isEmpty && r2.exceptAll(r1).isEmpty,
       "the residual fit must be deterministic")
     // and the fit is not a no-op: the fitted book differs from its
     // formula-seed starting point somewhere
     val cents = graft.functions.Codebooks.centroidsArr
     val cnorms = graft.functions.Codebooks.centroidNorms
-    val pqFit = Similarity.fitPqCodebooks(emb, cents, cnorms,
+    val pqFit = Similarity.fitPqCodebooks(emb, cents, cnorms, PqFitted(),
       fpRef = graft.functions.Codebooks.fpCentroidsFor(64))
     assert(pqFit.flatten.flatten.toSeq !=
       graft.functions.Codebooks.pqCents.flatten.flatten.toSeq,
@@ -592,31 +643,39 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("concurrent fitted queries use their OWN codebooks (no holder cross-contamination)") {
-    // two fits with different parameters race fit→analyze on purpose;
-    // per-fit function names + closed-over arrays must keep each query's
-    // codebook its own, so each concurrent result equals its serial twin
-    val serialA = Similarity.ivfTopKFitted(emb, isQuery, k = 10, iters = 1)
-      .select("query_id", "corpus_id", "cos").collect().toSet
-    val serialB = Similarity.ivfTopKFitted(emb, isQuery, k = 10, iters = 3)
-      .select("query_id", "corpus_id", "cos").collect().toSet
+    // one fitted cosine spec over two corpora: both fits register their
+    // kernels under the same base names (graft_ivf_bucket_64,
+    // graft_ivf_probes_64_8) but fit different books, so only the
+    // per-fit name suffix keeps each query's codebook its own
+    val spec = fixedIvf.copy(fitted = true)
+    val embA = emb
+    val embB = emb.filter(isQuery || col("vec_id") % 2 === 0)
+    def run(corpus: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfTopK(corpus, isQuery, spec).collect().toSet
+    // deterministic interleave: a later fit must not rebind the kernels
+    // an earlier fit's plan resolves (plans resolve names when built)
+    def buckets(s: Similarity.Serving) =
+      Similarity.indexSide(Similarity.vectors(embA), s)
+        .select("corpus_id", "bucket").collect().toSet
+    val sA = Similarity.servingKernels(embA, isQuery, spec, embA.count())
+    val bucketsA = buckets(sA)
+    val sB = Similarity.servingKernels(embB, isQuery, spec, embB.count())
+    assert(buckets(sB) != bucketsA, "the two corpora must fit different books")
+    assert(buckets(sA) === bucketsA, "a later fit rebound an earlier fit's bucket kernel")
+    // and the race itself: fit -> analyze on two threads at once, each
+    // result equal to its serial twin
+    val serialA = run(embA)
+    val serialB = run(embB)
     val results = new java.util.concurrent.ConcurrentHashMap[String, Set[org.apache.spark.sql.Row]]()
     val start = new java.util.concurrent.CountDownLatch(1)
     val threads = Seq(
-      new Thread(() => {
-        start.await()
-        results.put("a", Similarity.ivfTopKFitted(emb, isQuery, k = 10, iters = 1)
-          .select("query_id", "corpus_id", "cos").collect().toSet)
-      }),
-      new Thread(() => {
-        start.await()
-        results.put("b", Similarity.ivfTopKFitted(emb, isQuery, k = 10, iters = 3)
-          .select("query_id", "corpus_id", "cos").collect().toSet)
-      }))
+      new Thread(() => { start.await(); results.put("a", run(embA)) }),
+      new Thread(() => { start.await(); results.put("b", run(embB)) }))
     threads.foreach(_.start())
     start.countDown()
     threads.foreach(_.join(300000))
-    assert(results.get("a") === serialA, "concurrent 1-iter fit must equal its serial twin")
-    assert(results.get("b") === serialB, "concurrent 3-iter fit must equal its serial twin")
+    assert(results.get("a") === serialA, "concurrent fit over corpus A must equal its serial twin")
+    assert(results.get("b") === serialB, "concurrent fit over corpus B must equal its serial twin")
   }
 
   test("int8 quantization: codes bounded and envelope-saturating, error within " +
@@ -724,8 +783,8 @@ class SimilaritySpec extends SparkSpec {
     assert(small === graft.functions.Codebooks.centroidsFor(200))
     assert(!big.take(200).zip(small).exists { case (a, b) => a == b },
       "big-ladder rows must not reuse the small-region rows")
-    val fixed = Similarity.knnJoinIvf(emb)
-    val sized = Similarity.knnJoinIvfSized(emb)
+    val fixed = Similarity.knnJoinIvf(emb, IvfSpec(laddered = false, probes = 2))
+    val sized = Similarity.knnJoinIvf(emb, IvfSpec(probes = 2))
     assert(sized.except(fixed).count() === 0 && fixed.except(sized).count() === 0,
       "<= 4096 vectors must produce the identical kNN graph")
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TopicOps
+import graft.operators.{IvfSpec, TopicOps}
 import graft.sources.{Tables, Topics}
 import graft.streaming.TopicStream
 
@@ -554,11 +554,13 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_sim_ivf_pq", embDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val streamed = graft.streaming.SimilarityStream.ivfPqTopKStream(
-      spark, embDir, out, ckpt, maxFilesPerTrigger = Some(1))
+    val pq = IvfSpec(codes = IvfSpec.PqFormula)
+    val streamed = graft.streaming.SimilarityStream.ivfTopKStream(
+      spark, embDir, out, ckpt, pq, maxFilesPerTrigger = Some(1),
+      tablePrefix = "graft_pq_stream")
       .select("query_id", "corpus_id", "cos", "rnk")
-    val batch = graft.operators.Similarity.ivfPqTopK(
-      Tables.load(spark, sf, "embeddings"), col("vec_id") < 8)
+    val batch = graft.operators.Similarity.ivfTopK(
+      Tables.load(spark, sf, "embeddings"), col("vec_id") < 8, pq)
       .select("query_id", "corpus_id", "cos", "rnk")
     // the PQ index is static and a query's candidates land in its
     // arrival batch, so any-order replay reproduces the batch ranking
@@ -575,12 +577,13 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_sim_ivf_pq_fitted", embDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val streamed = graft.streaming.SimilarityStream.ivfPqTopKStream(
-      spark, embDir, out, ckpt, maxFilesPerTrigger = Some(1),
-      tablePrefix = "graft_pq_fitted_spec", book = "fitted")
+    val fitted = IvfSpec.FittedPq
+    val streamed = graft.streaming.SimilarityStream.ivfTopKStream(
+      spark, embDir, out, ckpt, fitted, maxFilesPerTrigger = Some(1),
+      tablePrefix = "graft_pq_fitted_spec")
       .select("query_id", "corpus_id", "cos", "rnk")
-    val batch = graft.operators.Similarity.ivfPqTopKFittedSized(
-      Tables.load(spark, sf, "embeddings"), col("vec_id") < 8)
+    val batch = graft.operators.Similarity.ivfTopK(
+      Tables.load(spark, sf, "embeddings"), col("vec_id") < 8, fitted)
       .select("query_id", "corpus_id", "cos", "rnk")
     assert(streamed.count() === batch.count())
     assert(streamed.except(batch).count() === 0)
@@ -595,15 +598,64 @@ class StreamingSpec extends SparkSpec {
       .write.mode("overwrite").parquet(embDir)
     val (out, ckpt) = TopicStream.scratchDirs("spec_sim_mips_pq", embDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val streamed = graft.streaming.SimilarityStream.mipsIvfPqTopKStream(
-      spark, embDir, out, ckpt, maxFilesPerTrigger = Some(1))
+    val mipsPq = IvfSpec.MipsPq
+    val streamed = graft.streaming.SimilarityStream.ivfTopKStream(
+      spark, embDir, out, ckpt, mipsPq, maxFilesPerTrigger = Some(1),
+      tablePrefix = "graft_mips_pq_stream")
       .select("query_id", "corpus_id", "ip", "rnk")
-    val batch = graft.operators.Similarity.mipsIvfPqTopK(
-      Tables.load(spark, sf, "embeddings"), col("vec_id") < 8)
+    val batch = graft.operators.Similarity.ivfTopK(
+      Tables.load(spark, sf, "embeddings"), col("vec_id") < 8, mipsPq)
       .select("query_id", "corpus_id", "ip", "rnk")
     assert(streamed.count() === batch.count())
     assert(streamed.except(batch).count() === 0)
     assert(batch.except(streamed).count() === 0)
+  }
+
+  test("a query whose centroid cosines all tie (NaN) gets each neighbour once " +
+      "on the batch, stream and Cli PQ paths — the probe kernel emits each " +
+      "bucket once") {
+    // query 0 scaled by `factor`: 0 gives a zero norm (the MIPS paths —
+    // under cosine it fails loudly on the ANSI divide), +inf a non-finite
+    // vector whose cosines are NaN without a zero divisor (cosine paths)
+    def fixture(name: String, factor: Float): String = {
+      val dir = s"target/stream-scratch/$name"
+      Tables.load(spark, sf, "embeddings")
+        .withColumn("embedding", when(col("vec_id") === 0L,
+          transform(col("embedding"), x => x * lit(factor))).otherwise(col("embedding")))
+        .repartition(4).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    val zeroDir = fixture("zero-query", 0.0f)
+    val infDir = fixture("inf-query", Float.PositiveInfinity)
+    def assertOnce(label: String, out: org.apache.spark.sql.DataFrame): Unit = {
+      val rows = out.select("query_id", "corpus_id").collect()
+      assert(rows.exists(_.getLong(0) == 0L), s"$label: query 0 must be served")
+      assert(rows.length === rows.distinct.length,
+        s"$label: repeated (query_id, corpus_id) rows")
+    }
+    val pq = IvfSpec(codes = IvfSpec.PqFormula)
+    val mipsPq = IvfSpec.MipsPq
+    val cases = Seq(zeroDir -> mipsPq, infDir -> pq, infDir -> mipsPq,
+      infDir -> IvfSpec.FittedPq, infDir -> IvfSpec.M16)
+    for (((dir, spec), i) <- cases.zipWithIndex) {
+      assertOnce(s"batch $i", graft.operators.Similarity.ivfTopK(
+        Tables.load(spark, dir, "embeddings"), col("vec_id") < 8, spec))
+      if (i < 3) {
+        val (out, ckpt) = TopicStream.scratchDirs(s"spec_tied_query_$i", dir)
+        assertOnce(s"stream $i", graft.streaming.SimilarityStream.ivfTopKStream(
+          spark, s"$dir/embeddings.parquet", out, ckpt, spec,
+          maxFilesPerTrigger = Some(1), tablePrefix = s"graft_tied_query_$i"))
+      }
+    }
+    val cliOut = "target/stream-scratch/inf-query-cli"
+    assert(Cli.run(spark, Seq("-d", infDir, "-O", cliOut, "query", "embeddings",
+      "graft_tied_query_cli"), print = _ => ()) === 0)
+    assertOnce("Cli query", spark.read.parquet(s"$cliOut/topk"))
+    val e = intercept[Exception] {
+      graft.operators.Similarity.ivfTopK(Tables.load(spark, zeroDir, "embeddings"),
+        col("vec_id") < 8, pq).collect()
+    }
+    assert(e.getMessage.contains("DIVIDE_BY_ZERO"), "a zero-norm cosine query fails loudly")
   }
 
   test("streaming pq-code dedup over multi-batch replay equals batch " +
@@ -842,8 +894,9 @@ class StreamingSpec extends SparkSpec {
         s"IVF probe must shuffle only the micro-batch (1 Exchange), static index none:\n$ivfPlan")
 
       val (out2, ckpt2) = TopicStream.scratchDirs("spec_plan_pq", embDir)
-      graft.streaming.SimilarityStream.ivfPqTopKStream(
-        spark, embDir, out2, ckpt2, maxFilesPerTrigger = Some(1))
+      graft.streaming.SimilarityStream.ivfTopKStream(
+        spark, embDir, out2, ckpt2, IvfSpec(codes = IvfSpec.PqFormula),
+        maxFilesPerTrigger = Some(1), tablePrefix = "graft_pq_stream")
       val pqPlan = TopicStream.lastBatchPlan
       assert(pqPlan.contains("graft_pq_stream_idx"), s"bucketed PQ index scan missing:\n$pqPlan")
       assert(exchanges(pqPlan) === 1,
